@@ -1,6 +1,7 @@
 import os
 import shutil
 import sys
+import uuid
 
 import pytest
 
@@ -29,3 +30,19 @@ def spark_global(spark):
     """Alias for hypothesis @given tests: the underlying fixture is
     session-scoped, so reuse across examples is safe and intended."""
     return spark
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group; return (its result, the
+    number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status tracker through the async bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -3,7 +3,7 @@ on must be visible in `explain` output, not just intended.
 
 - column pruning: the extraction scan must read ONLY (url, html);
 - predicate pushdown: filters reach the parquet scan (PushedFilters);
-- broadcast joins: small dims and the lineage anti-join broadcast;
+- broadcast joins: small dims and the anti-join broadcast;
 - partial aggregation: map-side combine before the shuffle;
 - whole-stage codegen spans exist on the relational queries.
 """
