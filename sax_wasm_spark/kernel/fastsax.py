@@ -3,22 +3,45 @@
 ``parse_doc(data, events)`` produces exactly the flat event rows that
 ``SaxParser.write(data); end()`` + ``EventCollector`` produce (see
 collect.FIELD_NAMES), for the one-write-per-document case — the case
-every Spark operator uses. It is one flat function: FSM state in local
-integers, module-level pure scan kernels, no per-grapheme method
-dispatch, no entity objects, and no cross-write hydration machinery
-(a single write makes every lazy header a plain slice).
+every Spark operator uses. It is one flat scanning loop (``scan``):
+FSM state in local integers, module-level pure scan kernels, no
+per-grapheme method dispatch, no entity objects, and no cross-write
+hydration machinery (a single write makes every lazy header a plain
+slice).
+
+The loop tracks byte offsets only. Line/character positions are a
+post-pass: at each emission site the loop writes into the eight
+position slots (indices 10-17) four (byte anchor, k) pairs, and
+``resolve_positions`` maps each pair to (line, UTF-16 column) with a
+newline index, ``searchsorted`` and a unit prefix sum. Every position
+the reference reports is "the position of the anchor, stepped back k
+UTF-16 units, clamped at the line start"; the kernel's quirks are all
+expressed as the anchor and k it writes:
+- an unset position (OpenTag end before the tag closes, the value of a
+  bare attribute, the end of an implicitly closed tag) is anchor 0 →
+  (0, 0);
+- the reference's ``ch - k`` column arithmetic keeps its k, so a step
+  back over a 4-byte character lands mid-surrogate exactly as the
+  reference does (``<a b=🚀>``, ``<a 🚀=1>``);
+- anchors are carried in the kernel, not read back from the byte
+  columns: those can read 0 on a row whose positions are correct (the
+  ``c`` attribute of ``<a b="x"🚀 c=1>``), and a tag entry reused after
+  text keeps the stale anchors the reference reports.
+With ``anchors`` 0 the loop writes 0 into every position slot instead:
+that is ``fastsax_np.parse_doc_np``, the extraction mode.
 
 Returns None when the document is outside the fast profile (invalid
 UTF-8, including a truncated trailing sequence) — callers fall back to
 the streaming FSM (saxkernel.SaxParser), the semantic source of truth.
-Equivalence is enforced differentially (tests/test_fastsax.py) over the
-fixture corpus, fuzz documents, and the synthetic pages corpus; the FSM
+Equivalence is enforced differentially (tests/test_fastsax.py,
+tests/test_fastsax_np.py) over the fixture corpus, fuzz documents, the
+synthetic pages corpus and a multi-MB multi-line document; the FSM
 itself is validated byte-for-byte against the reference WASM
 (tools/diff_ref.py).
 
-States, terminator classes and positional arithmetic mirror
-/root/reference/src/sax/parser.rs (see saxkernel.py for per-handler
-line citations). Single-write simplifications used here:
+States, terminator classes and byte arithmetic mirror the reference's
+src/sax/parser.rs (see saxkernel.py for per-handler line citations).
+Single-write simplifications used here:
 - streaming ``header.1`` updates only matter across writes; values
   materialize as plain slices at emission (with the one-byte
   ``start>0 && start==end`` quirk of tag.rs:112-114 preserved);
@@ -30,6 +53,10 @@ line citations). Single-write simplifications used here:
 from __future__ import annotations
 
 import re
+import struct
+from itertools import chain
+
+import numpy as np
 
 from .collect import EventCollector
 from .names import is_name_start_char
@@ -43,8 +70,11 @@ for _b in range(0xE0, 0xF0):
 for _b in range(0xF0, 0xF8):
     GL[_b] = 4
 
-_CONT = bytes(range(0x80, 0xC0))
-_FOUR = bytes(range(0xF0, 0xF8))
+# UTF-16 units contributed by each byte of valid UTF-8: continuation
+# bytes 0, a 4-byte lead 2 (a surrogate pair), every other byte 1
+UNITS = np.ones(256, np.int64)
+UNITS[0x80:0xC0] = 0
+UNITS[0xF0:0xF8] = 2
 
 TAG_NAME_END = b">/ \n\t\r"
 ATTRIBUTE_NAME_END = b"=> \t\n"
@@ -93,28 +123,6 @@ S_JSX = 22
 S_SKIP_WS = 23
 
 
-def _cc(span: bytes) -> int:
-    """UTF-16 column width of a valid-UTF-8 span."""
-    if span.isascii():
-        return len(span)
-    return len(span.translate(None, _CONT)) + (len(span) - len(span.translate(None, _FOUR)))
-
-
-def _advr(buf, asc, start, pos, line, ch):
-    """Advance (line, ch) over buf[start:pos] without slicing when the
-    whole buffer is ASCII (the common web-text case)."""
-    if start == pos:
-        return line, ch
-    nl = buf.count(b"\n", start, pos)
-    if asc:
-        if nl:
-            return line + nl, pos - buf.rfind(b"\n", start, pos) - 1
-        return line, ch + (pos - start)
-    if nl:
-        return line + nl, _cc(buf[buf.rfind(b"\n", start, pos) + 1 : pos])
-    return line, ch + _cc(buf[start:pos])
-
-
 def _last_gl(buf: bytes, end: int) -> int:
     i = end - 1
     stop = max(end - 4, 0)
@@ -123,83 +131,61 @@ def _last_gl(buf: bytes, end: int) -> int:
     return end - i
 
 
-def _tuof(buf, n, asc, regex, targets, cursor, line, ch, include):
+def _tuof(buf, n, regex, targets, cursor, include):
     """take_until_one_found (cursor.py semantics, single-write).
 
-    Returns (kind, cursor, line, ch, lcp, last_byte, found):
+    Returns (kind, cursor, lcp, last_byte, found):
     kind 0 = None-return (no state change), 1 = precheck hit (no state
     change; last_byte = the previous byte), 2 = committed scan.
     last_byte mirrors span[-1] of the reference return value.
     """
     if cursor == n:
-        return (0, cursor, line, ch, 0, -1, False)
+        return (0, cursor, 0, -1, False)
     idx = cursor - 1 if cursor else 0
     if buf[idx] in targets:
-        return (1, cursor, line, ch, 0, buf[idx], True)
+        return (1, cursor, 0, buf[idx], True)
     start = cursor
     m = regex.search(buf, start)
     if m is not None:
         pos = m.start()
         if pos == start and not include:
-            return (0, cursor, line, ch, 0, -1, False)
-        line, ch = _advr(buf, asc, start, pos, line, ch)
+            return (0, cursor, 0, -1, False)
         matched = buf[pos]
         if include:
-            if matched == 0x0A:
-                line += 1
-                ch = 0
-            else:
-                ch += 1
-            return (2, pos + 1, line, ch, pos, matched, True)
+            return (2, pos + 1, pos, matched, True)
         # span excludes the match: last byte is buf[pos-1]
         ln = GL[matched]
         lcp = pos - ln if pos >= ln else 0
-        return (2, pos, line, ch, lcp, buf[pos - 1], True)
+        return (2, pos, lcp, buf[pos - 1], True)
     if start == n:
-        return (0, cursor, line, ch, 0, -1, False)
-    line, ch = _advr(buf, asc, start, n, line, ch)
+        return (0, cursor, 0, -1, False)
     ln = _last_gl(buf, n)
-    return (2, n, line, ch, n - ln, buf[n - 1], False)
+    return (2, n, n - ln, buf[n - 1], False)
 
 
-def _tu(buf, n, asc, target, cursor, line, ch, include):
+def _tu(buf, n, target, cursor, include):
     """take_until (cursor.py semantics, single-write, clean buffer).
 
-    Returns (kind, cursor, line, ch, lcp, last_byte, nonempty)."""
+    Returns (kind, cursor, lcp, last_byte, nonempty)."""
     if cursor == n:
-        return (0, cursor, line, ch, 0, -1, False)
+        return (0, cursor, 0, -1, False)
     start = cursor
     pos = buf.find(target, start)
     if pos >= 0:
-        line, ch = _advr(buf, asc, start, pos, line, ch)
         if include:
-            if target == 0x0A:
-                line += 1
-                ch = 0
-            else:
-                ch += 1
-            return (2, pos + 1, line, ch, pos, target, True)
+            return (2, pos + 1, pos, target, True)
         ln = GL[buf[pos]]
         lcp = pos - ln if pos >= ln else 0
-        return (2, pos, line, ch, lcp, buf[pos - 1] if pos > start else -1, pos > start)
-    line, ch = _advr(buf, asc, start, n, line, ch)
+        return (2, pos, lcp, buf[pos - 1] if pos > start else -1, pos > start)
     ln = _last_gl(buf, n) if n > start else 0
-    return (2, n, line, ch, n - ln if n >= ln else 0, buf[n - 1] if n > start else -1, n > start)
+    return (2, n, n - ln if n >= ln else 0, buf[n - 1] if n > start else -1, n > start)
 
 
-def _skipws(buf, n, cursor, line, ch):
-    """skip_whitespace (cursor.py:skip_whitespace).
-
-    Returns (cursor, line, ch, lcp, done)."""
+def _skipws(buf, n, cursor):
+    """skip_whitespace (cursor.py:skip_whitespace). Returns (cursor, lcp, done)."""
     m = RE_NON_WS.search(buf, cursor)
     pos = m.start() if m else n
-    nl = buf.count(b"\n", cursor, pos)
-    if nl:
-        line += nl
-        ch = pos - buf.rfind(b"\n", cursor, pos) - 1
-    else:
-        ch += pos - cursor
-    return (pos, line, ch, pos - 1 if pos else 0, pos < n)
+    return (pos, pos - 1 if pos else 0, pos < n)
 
 
 def _mat(val, buf, h0, h1):
@@ -248,12 +234,16 @@ def _name_mat(buf, e):
     return nm
 
 
-def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
-    """Flat event rows for one single-write document, or None → use FSM."""
+def scan(data: bytes, events: int, anchors: int):  # noqa: C901, PLR0912, PLR0915
+    """Flat event rows for one single-write document, or None → use FSM.
+
+    With ``anchors`` 1 the position slots hold ints only: (byte anchor,
+    k) pairs for ``resolve_positions``, and 0 in the slots a text-like
+    row leaves None. With ``anchors`` 0 they hold the final
+    positions-off values: 0, or None."""
     buf = data
     n = len(buf)
-    asc = buf.isascii()
-    if not asc:
+    if not buf.isascii():
         try:
             buf.decode("utf-8")
         except UnicodeDecodeError:
@@ -270,92 +260,85 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
     ev_ct = events & 256
     ev_cdata = events & 512
     want_text = ev_text or ev_ct
+    # the k of a (byte anchor, k) position pair; 0 with anchors off
+    k1 = anchors and 1
+    k2 = anchors and 2
+    k4 = anchors and 4
+    k9 = anchors and 9
+    # the open_end/close_start slots of a text-like row: None, or 0 so
+    # that anchor rows are all-int (the callers of resolve_positions
+    # put the None back, by event code)
+    nil = 0 if anchors else None
 
     rows: list[tuple] = []
     append = rows.append
     seq = 0
 
     cursor = 0
-    line = 0
-    ch = 0
-    ll = 0
-    lc = 0
     lcp = 0
     state = S_BEGIN
     brace_ct = 0
     quote = 0
 
-    # pending text (mirrors parser text buffer)
+    # pending text; tx_sa = start anchor
     tx_on = False
     tx_val = b""
-    tx_sl = tx_sc = 0
     tx_h0 = 0
     tx_h1 = 0
     tx_b0 = 0
+    tx_sa = 0
 
-    # stack entries / current tag:
-    # [h0, h1, name|None, os_l, os_c, oe_l, oe_c, cs_l, cs_c, b0, b1]
+    # stack entries / current tag: [h0, h1, name|None, b0, b1 (the open
+    # '>', also the open-end anchor), start anchor, close-start anchor]
     tags: list[list] = []
-    tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
+    tg = [0, 0, None, 0, 0, 0, 0]
 
-    # attribute: [ns_l, ns_c, ne_l, ne_c, nh0, nh1,
-    #             vs_l, vs_c, ve_l, ve_c, vh0, vh1, atype, b0]
-    at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
+    # attribute: [nh0, nh1, vh0, vh1, atype, b0, name-start anchor (k 1),
+    #             name-end anchor, value-start anchor, value-start k,
+    #             value-end anchor]
+    at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
 
     # close-tag capture
     cl_h0 = 0
     cl_h1 = 0
 
-    # markup decl
+    # markup decl; md_sa = start anchor (k 4 for comments, 9 otherwise)
     md_on = False
     md_val = b""
     md_h0 = 0
     md_h1 = 0
-    md_sl = md_sc = 0
     md_b0 = 0
     md_b1 = 0
+    md_sa = 0
     me_on = False
     me_h0 = 0
     me_h1 = 0
-    me_sl = me_sc = 0
     me_b0 = 0
+    me_sa = me_sk = 0
 
-    # proc inst
-    pi_sl = pi_sc = 0
+    # proc inst; pi_te = target-end anchor (k 1), pi_cs = content start
     pi_b0 = 0
-    pi_t_el = pi_t_ec = 0
     pi_th0 = pi_th1 = 0
     pi_ch0 = pi_ch1 = 0
-    pi_c_sl = pi_c_sc = 0
+    pi_te = pi_cs = 0
 
-    # BOM handled before the loop (saves the per-grapheme `first`
-    # check). The BOM grapheme was consumed through the stepping
-    # preamble, so it counts one column (ch = 1) and its lcp is never
-    # observed — the next iteration overwrites it.
+    # BOM handled before the loop (saves a per-grapheme `first` check;
+    # the BOM grapheme's own lcp is never observed — the next iteration
+    # overwrites it)
     state = S_BEGIN_WS
     if buf[:3] == b"\xef\xbb\xbf":
         cursor = 3
-        ch = 1
 
     while cursor < n:
         b0 = buf[cursor]
-        ll = line
-        lc = ch
         if b0 < 0x80:
             # ASCII fast path: no length table, no truncation guard
-            if b0 == 0x0A:
-                line += 1
-                ch = 0
-            else:
-                ch += 1
             lcp = cursor
             cursor += 1
         else:
-            gl = GL[b0]
-            gend = cursor + gl
+            gend = cursor + GL[b0]
             if gend > n:
                 return None  # cannot happen on valid UTF-8; defensive
-            ch += 2 if gl == 4 else 1
             lcp = cursor
             cursor = gend
 
@@ -379,45 +362,41 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         gl2 = GL[g] if g >= 0x80 else 1
                         if cursor + gl2 > n:
                             break
-                        ll = line
-                        lc = ch
-                        ch += 2 if gl2 == 4 else 1
                         lcp = cursor
                         cursor += gl2
                         # SKIP_WS done-arm: reset pending text AFTER the
                         # grapheme consume (mirrors the stepping order)
                         if tx_on:
                             tx_val = b""
-                            tx_sl = line
-                            tx_sc = ch
                             tx_h0 = cursor
+                            tx_sa = cursor
                         state = S_BEGIN_WS
                         b0 = g
                         continue
-                    cursor, line, ch, lcp, done = _skipws(buf, n, cursor, line, ch)
-                    if not done:
+                    m = RE_NON_WS.search(buf, cursor)
+                    if m is None:
+                        lcp = n - 1 if n else 0
+                        cursor = n
                         break  # EOF inside whitespace: stay SKIP_WS
+                    cursor = m.start()
+                    lcp = cursor - 1 if cursor else 0
                     # SKIP_WS done-arm (bulk): reset pending text BEFORE
                     # the next grapheme consume (cursor at the non-ws)
                     if tx_on:
                         tx_val = b""
-                        tx_sl = line
-                        tx_sc = ch
                         tx_h0 = cursor
+                        tx_sa = cursor
                     state = S_BEGIN_WS
                     nb = buf[cursor]
                     gl2 = GL[nb] if nb >= 0x80 else 1
                     if cursor + gl2 > n:
                         break
-                    ll = line
-                    lc = ch
-                    ch += 2 if gl2 == 4 else 1
                     lcp = cursor
                     cursor += gl2
                     b0 = nb
                     continue
                 if b0 == 0x3C:
-                    tg = [0, 0, None, line, lc, 0, 0, 0, 0, 0, 0]
+                    tg = [0, 0, None, 0, 0, lcp, 0]
                     state = S_LT
                     # fuse next(): consume the grapheme after '<' and
                     # chain straight into the LT handler
@@ -425,13 +404,6 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         b0 = buf[cursor]
                         gl = GL[b0] if b0 >= 0x80 else 1
                         if cursor + gl <= n:
-                            ll = line
-                            lc = ch
-                            if b0 == 0x0A:
-                                line += 1
-                                ch = 0
-                            else:
-                                ch += 2 if gl == 4 else 1
                             lcp = cursor
                             cursor += gl
                             continue
@@ -439,11 +411,10 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                 if not tx_on and want_text:
                     tx_on = True
                     tx_val = b""
-                    tx_sl = line
-                    tx_sc = lc
                     tx_h0 = lcp
                     tx_h1 = lcp
                     tx_b0 = lcp
+                    tx_sa = lcp
                 # new_text only sets state; this grapheme is NOT re-run
                 # through the text handler (parser.rs:1213-1222 returns)
                 state = S_TEXT
@@ -451,7 +422,8 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
 
             # ---------------- LT ----------------
             if st == S_LT:
-                fl_ch = ch - 2 if ch >= 2 else 0
+                # pending text flushes at byte fl_off ('<'); its end
+                # position is (cursor, k 2)
                 fl_off = lcp - 1 if lcp >= 1 else 0
                 is_name = (
                     (0x61 <= b0 <= 0x7A)
@@ -466,19 +438,28 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     state = S_OPEN_TAG
                     if tx_on:
                         tx_on = False
-                        if not (tx_h0 == fl_off and not tx_val):
-                            val, ok = _mat(tx_val, buf, tx_h0, fl_off)
-                            if ev_text and ok:
+                        if ev_text and not (tx_h0 == fl_off and not tx_val):
+                            h0 = tx_h0
+                            ok = True
+                            if fl_off > h0:
+                                val = tx_val + buf[h0:fl_off]
+                            elif h0 > fl_off:
+                                val = tx_val
+                                ok = len(val) > 0
+                            elif h0 > 0:
+                                val = tx_val + buf[h0 : h0 + 1]
+                            else:
+                                val = tx_val
+                            if ok:
                                 append((0, seq, None, val, None, None, None, None,
-                                        None, None, tx_sl, tx_sc, line, fl_ch, None,
-                                        None, None, None, tx_b0, fl_off))
+                                        None, None, anchors and tx_sa, 0,
+                                        anchors and cursor, k2, nil,
+                                        nil, nil, nil, tx_b0, fl_off))
                                 seq += 1
                     continue  # redispatch into OPEN_TAG
                 if b0 == 0x21:  # '!'
                     state = S_MARKUP_DECL
                     md_on = True
-                    md_sl = line
-                    md_sc = lc
                     md_b0 = cursor - 2 if cursor >= 2 else 0
                     md_h0 = cursor - 1 if cursor >= 1 else 0
                     md_h1 = cursor
@@ -494,19 +475,28 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     # further grapheme is consumed).
                     if tx_on:
                         tx_on = False
-                        if not (tx_h0 == fl_off and not tx_val):
-                            val, ok = _mat(tx_val, buf, tx_h0, fl_off)
-                            if ev_text and ok:
+                        if ev_text and not (tx_h0 == fl_off and not tx_val):
+                            h0 = tx_h0
+                            ok = True
+                            if fl_off > h0:
+                                val = tx_val + buf[h0:fl_off]
+                            elif h0 > fl_off:
+                                val = tx_val
+                                ok = len(val) > 0
+                            elif h0 > 0:
+                                val = tx_val + buf[h0 : h0 + 1]
+                            else:
+                                val = tx_val
+                            if ok:
                                 append((0, seq, None, val, None, None, None, None,
-                                        None, None, tx_sl, tx_sc, line, fl_ch, None, None,
-                                        None, None, tx_b0, fl_off))
+                                        None, None, anchors and tx_sa, 0,
+                                        anchors and cursor, k2, nil, nil,
+                                        nil, nil, tx_b0, fl_off))
                                 seq += 1
                     nxt2 = buf[cursor : cursor + 2]
                     if nxt2 == b"--":
-                        ch += 2
                         cursor += 2
-                        md_sl = line
-                        md_sc = ch - 4 if ch >= 4 else 0
+                        md_sa = cursor
                         md_val = b""
                         md_h0 = cursor
                         md_h1 = 0
@@ -514,24 +504,22 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         state = S_COMMENT
                         epos = buf.find(b"-->", cursor)
                         if epos >= 0:
-                            line, ch = _advr(buf, asc, cursor, epos + 3, line, ch)
                             body = buf[md_h0:epos]
                             cursor = epos + 3
                             lcp = cursor - 1
                             if ev_comment:
                                 append((4, seq, None, body, None, None, None,
-                                        None, None, None, md_sl, md_sc, line, ch,
-                                        None, None, None, None, md_b0, cursor))
+                                        None, None, None, anchors and md_sa, k4,
+                                        anchors and cursor, 0,
+                                        nil, nil, nil, nil, md_b0, cursor))
                                 seq += 1
                             md_on = False
                             md_val = b""
                             state = S_BEGIN_WS
                     elif nxt2 == b"[C" or nxt2 == b"[c":
                         if buf[cursor : cursor + 7].lower() == b"[cdata[":
-                            ch += 7
                             cursor += 7
-                            md_sl = line
-                            md_sc = ch - 9 if ch >= 9 else 0
+                            md_sa = cursor
                             md_b1 = cursor - 9 if cursor >= 9 else 0
                             md_val = b""
                             md_h0 = cursor
@@ -539,83 +527,95 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                             state = S_CDATA
                             epos = buf.find(b"]]>", cursor)
                             if epos >= 0:
-                                line, ch = _advr(buf, asc, cursor, epos + 3, line, ch)
                                 body = buf[md_h0:epos]
                                 cursor = epos + 3
                                 lcp = cursor - 1
                                 if ev_cdata:
                                     append((9, seq, None, body, None, None, None,
-                                            None, None, None, md_sl, md_sc, line, ch,
-                                            None, None, None, None, md_b0, cursor))
+                                            None, None, None, anchors and md_sa, k9,
+                                            anchors and cursor, 0,
+                                            nil, nil, nil, nil, md_b0, cursor))
                                     seq += 1
                                 md_on = False
                                 md_val = b""
                                 state = S_BEGIN_WS
                 elif b0 == 0x2F:  # '/'
                     state = S_CLOSE_TAG
-                    tg[7] = line
-                    tg[8] = lc - 1 if lc >= 1 else 0
+                    tg[6] = lcp - 1  # the '<'
                     cl_h0 = lcp
                     cl_h1 = 0
                     # fuse next(): chain straight into the close-tag
                     # handler for the grapheme after '/'
                     if tx_on:
                         tx_on = False
-                        if not (tx_h0 == fl_off and not tx_val):
-                            val, ok = _mat(tx_val, buf, tx_h0, fl_off)
-                            if ev_text and ok:
+                        if ev_text and not (tx_h0 == fl_off and not tx_val):
+                            h0 = tx_h0
+                            ok = True
+                            if fl_off > h0:
+                                val = tx_val + buf[h0:fl_off]
+                            elif h0 > fl_off:
+                                val = tx_val
+                                ok = len(val) > 0
+                            elif h0 > 0:
+                                val = tx_val + buf[h0 : h0 + 1]
+                            else:
+                                val = tx_val
+                            if ok:
                                 append((0, seq, None, val, None, None, None, None,
-                                        None, None, tx_sl, tx_sc, line, fl_ch, None, None,
-                                        None, None, tx_b0, fl_off))
+                                        None, None, anchors and tx_sa, 0,
+                                        anchors and cursor, k2, nil, nil,
+                                        nil, nil, tx_b0, fl_off))
                                 seq += 1
                     if cursor < n:
                         b0 = buf[cursor]
                         gl = GL[b0] if b0 >= 0x80 else 1
                         if cursor + gl <= n:
-                            ll = line
-                            lc = ch
-                            if b0 == 0x0A:
-                                line += 1
-                                ch = 0
-                            else:
-                                ch += 2 if gl == 4 else 1
                             lcp = cursor
                             cursor += gl
                             continue
                     break
                 elif b0 == 0x3F:  # '?'
                     state = S_PROC_INST
-                    pi_sl = line
-                    pi_sc = ch - 2 if ch >= 2 else 0
                     pi_th0 = lcp - 1 if lcp >= 1 else 0
                     pi_th1 = cursor
                     pi_b0 = cursor - 2 if cursor >= 2 else 0
-                    pi_t_el = pi_t_ec = 0
                     pi_ch0 = pi_ch1 = 0
-                    pi_c_sl = pi_c_sc = 0
+                    pi_te = pi_cs = 0
                 elif b0 == 0x3E:  # '>' : JSX fragment
                     if tx_on:
                         tx_on = False
-                        if not (tx_h0 == fl_off and not tx_val):
-                            val, ok = _mat(tx_val, buf, tx_h0, fl_off)
-                            if ev_text and ok:
+                        if ev_text and not (tx_h0 == fl_off and not tx_val):
+                            h0 = tx_h0
+                            ok = True
+                            if fl_off > h0:
+                                val = tx_val + buf[h0:fl_off]
+                            elif h0 > fl_off:
+                                val = tx_val
+                                ok = len(val) > 0
+                            elif h0 > 0:
+                                val = tx_val + buf[h0 : h0 + 1]
+                            else:
+                                val = tx_val
+                            if ok:
                                 append((0, seq, None, val, None, None, None, None,
-                                        None, None, tx_sl, tx_sc, line, fl_ch, None,
-                                        None, None, None, tx_b0, fl_off))
+                                        None, None, anchors and tx_sa, 0,
+                                        anchors and cursor, k2, nil,
+                                        nil, nil, nil, tx_b0, fl_off))
                                 seq += 1
-                    # process_open_tag(False)
-                    tg[5] = line
-                    tg[6] = ch
-                    tg[10] = cursor
+                    # process_open_tag(False) on the current tag entry,
+                    # which is stale when '<' came from text
+                    tg[4] = cursor
                     if ev_ot:
                         nm = _name_mat(buf, tg)
                         tg[2] = nm
                         tg[0] = tg[1] = 0
                         append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7], tg[8], tg[9], tg[10]))
+                                None, None, False, None, None, anchors and tg[5], 0,
+                                0, 0, anchors and tg[4], 0, anchors and tg[6], 0,
+                                tg[3], tg[4]))
                         seq += 1
                     tags.append(tg)
-                    tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
+                    tg = [0, 0, None, 0, 0, 0, 0]
                     state = S_BEGIN_WS
                     break
                 else:
@@ -623,11 +623,10 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     if not tx_on and want_text:
                         tx_on = True
                         tx_val = b""
-                        tx_sl = line
-                        tx_sc = ch
                         tx_h0 = lcp
                         tx_h1 = lcp
                         tx_b0 = lcp
+                        tx_sa = cursor
                     state = S_TEXT
                     break
                 # '!', '/', '?' arms flush pending text at the end
@@ -637,16 +636,18 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         val, ok = _mat(tx_val, buf, tx_h0, fl_off)
                         if ev_text and ok:
                             append((0, seq, None, val, None, None, None, None,
-                                    None, None, tx_sl, tx_sc, line, fl_ch, None, None,
-                                    None, None, tx_b0, fl_off))
+                                    None, None, anchors and tx_sa, 0,
+                                    anchors and cursor, k2, nil, nil,
+                                    nil, nil, tx_b0, fl_off))
                             seq += 1
                 break
 
             # ---------------- OPEN_TAG ----------------
             if st == S_OPEN_TAG:
-                tg[3] = line
-                tg[4] = ch - 2 if ch >= 2 else 0
-                tg[9] = cursor - 2 if cursor >= 2 else 0
+                tg[3] = cursor - 2 if cursor >= 2 else 0
+                # the reference's column is two units before the cursor:
+                # the '<', or mid-surrogate after a 4-byte name start
+                tg[5] = lcp if b0 >= 0xF0 else lcp - 1
                 byte = b0
                 if byte not in TAG_NAME_END:
                     m = RE_TAG_NAME_END.search(buf, cursor)
@@ -654,27 +655,17 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         # common case inlined (the precheck cannot hit:
                         # the current grapheme is not a terminator)
                         pos = m.start()
-                        ll = line
-                        lc = ch
-                        if pos != cursor:
-                            line, ch = _advr(buf, asc, cursor, pos, line, ch)
                         matched = buf[pos]
-                        if matched == 0x0A:
-                            line += 1
-                            ch = 0
-                        else:
-                            ch += 1
                         lcp = pos
                         cursor = pos + 1
                         byte = matched
                         tg[1] = lcp
                     else:
-                        k, cursor2, line2, ch2, lcp2, lastb, found = _tuof(
-                            buf, n, asc, RE_TAG_NAME_END, TAG_NAME_END, cursor, line, ch, True
+                        k, cursor2, lcp2, lastb, found = _tuof(
+                            buf, n, RE_TAG_NAME_END, TAG_NAME_END, cursor, True
                         )
                         if k == 2:
-                            ll, lc = line, ch
-                            cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
+                            cursor, lcp = cursor2, lcp2
                             byte = lastb
                             tg[1] = lcp if found else cursor
                         else:
@@ -684,21 +675,23 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     tg[2] = nm
                     tg[0] = tg[1] = 0
                     append((5, seq, nm.decode("utf-8", "replace"), None, None,
-                            None, None, False, None, None, tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7], tg[8], tg[9], tg[10]))
+                            None, None, False, None, None, anchors and tg[5], 0,
+                            0, 0, anchors and tg[4], 0, anchors and tg[6], 0,
+                            tg[3], tg[4]))
                     seq += 1
                 if byte == 0x3E:
-                    tg[5] = line
-                    tg[6] = ch
-                    tg[10] = cursor
+                    tg[4] = cursor
                     if ev_ot:
                         nm = _name_mat(buf, tg)
                         tg[2] = nm
                         tg[0] = tg[1] = 0
                         append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7], tg[8], tg[9], tg[10]))
+                                None, None, False, None, None, anchors and tg[5], 0,
+                                0, 0, anchors and tg[4], 0, anchors and tg[6], 0,
+                                tg[3], tg[4]))
                         seq += 1
                     tags.append(tg)
-                    tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
+                    tg = [0, 0, None, 0, 0, 0, 0]
                     state = S_BEGIN_WS
                 elif byte == 0x2F:
                     state = S_OPEN_SLASH
@@ -710,75 +703,84 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
             if st == S_CLOSE_TAG:
                 byte = b0
                 if byte != 0x3E:
-                    offset = 0
+                    # _tuof(RE_CLOSE_END, "> ", include=True) inlined
+                    # (kind 1 precheck ⟺ byte==' ' since '>' is handled
+                    # above; kind 0 ⟺ the dispatched char was the last)
                     start = lcp
-                    k, cursor2, line2, ch2, lcp2, lastb, found = _tuof(buf, n, asc, RE_CLOSE_END, b"> ", cursor, line, ch, True
-                    )
-                    if k != 0:
-                        byte = lastb
-                        offset = 1 if found else 0
-                        if k == 2:
-                            ll, lc = line, ch
-                            cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
-                    cl_h0 = start
-                    cl_h1 = cursor - offset
+                    if byte == 0x20:
+                        cl_h0 = start
+                        cl_h1 = cursor - 1
+                    elif cursor == n:
+                        cl_h0 = start
+                        cl_h1 = cursor
+                    else:
+                        m = RE_CLOSE_END.search(buf, cursor)
+                        if m is not None:
+                            pos = m.start()
+                            byte = buf[pos]
+                            lcp = pos
+                            cursor = pos + 1
+                            cl_h0 = start
+                            cl_h1 = pos
+                        else:
+                            byte = buf[n - 1]
+                            lcp = n - _last_gl(buf, n)
+                            cursor = n
+                            cl_h0 = start
+                            cl_h1 = n
                 if byte == 0x3E:
                     # ---- process_close_tag ----
                     state = S_BEGIN_WS
-                    close_name, _ok = _mat(b"", buf, cl_h0, cl_h1)
+                    h0 = cl_h0
+                    h1 = cl_h1
+                    if h1 > h0:
+                        close_name = buf[h0:h1]
+                    elif h0 > h1 or h0 == 0:
+                        close_name = b""
+                    else:
+                        close_name = buf[h0 : h0 + 1]
                     cl_h0 = cl_h1 = 0
                     found_i = -1
                     for i in range(len(tags) - 1, -1, -1):
                         if _name_of(buf, tags[i]) == close_name:
-                            e = tags[i]
-                            e[7] = tg[7]
-                            e[8] = tg[8]
                             found_i = i
                             break
                     if found_i < 0:
-                        # orphan close → text
+                        # orphan close → text, flushed at once
                         if not tx_on:
-                            tx_on = True
                             tx_b0 = 0
-                            tx_sl = tx_sc = 0
-                        tx_val = b"</" + close_name + b">"
-                        tx_sl = tg[7]
-                        tx_sc = tg[8]
-                        tx_h0 = 0
-                        tx_h1 = 0
-                        # flush_text(line, ch, 0)
                         tx_on = False
-                        if tx_val:  # h0==h1==0 but value non-empty
-                            if ev_text:
-                                append((0, seq, None, tx_val, None, None, None,
-                                        None, None, None, tx_sl, tx_sc, line, ch, None,
-                                        None, None, None, tx_b0, 0))
-                                seq += 1
+                        if ev_text:
+                            append((0, seq, None, b"</" + close_name + b">", None,
+                                    None, None, None, None, None, anchors and tg[6],
+                                    0, anchors and cursor, 0, nil,
+                                    nil, nil, nil, tx_b0, 0))
+                            seq += 1
                         break
-                    e = tags[found_i]
-                    # close_end + byte_range.1 on the matched tag
-                    e_ce_l, e_ce_c = line, ch
-                    e[10] = cursor
                     if not ev_ct:
                         keep = found_i if found_i > 1 else 1
                         del tags[keep:]
                         break
-                    while len(tags) > found_i:
+                    # the tags this close implies end at (0, 0) with their
+                    # open '>' as byte end; the matched one ends here
+                    while len(tags) > found_i + 1:
                         e2 = tags.pop()
                         nm = _name_mat(buf, e2)
-                        if e2 is e:
-                            ce_l, ce_c = e_ce_l, e_ce_c
-                            cs_l, cs_c = e2[7], e2[8]
-                        else:
-                            ce_l, ce_c = 0, 0
-                            cs_l, cs_c = e2[7], e2[8]
                         append((8, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, e2[3], e2[4], ce_l, ce_c,
-                                e2[5], e2[6], cs_l, cs_c, e2[9], e2[10]))
+                                None, None, False, None, None, anchors and e2[5], 0,
+                                0, 0, anchors and e2[4], 0, anchors and e2[6], 0,
+                                e2[3], e2[4]))
                         seq += 1
+                    e = tags.pop()
+                    nm = _name_mat(buf, e)
+                    append((8, seq, nm.decode("utf-8", "replace"), None, None,
+                            None, None, False, None, None, anchors and e[5], 0,
+                            anchors and cursor, 0, anchors and e[4], 0,
+                            anchors and tg[6], 0, e[3], cursor))
+                    seq += 1
                     break
                 if byte == 0x20:
-                    cursor, line, ch, lcp, _d = _skipws(buf, n, cursor, line, ch)
+                    cursor, lcp, _d = _skipws(buf, n, cursor)
                 break
 
             # ---------------- TEXT ----------------
@@ -790,12 +792,12 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                 # A multi-line text run used to cost one outer iteration
                 # per line ('\n' flush → SKIP_WS → BEGIN_WS → TEXT).
                 # This loop performs the whole cycle inline — newline
-                # flush at (fll, flc, fpos), whitespace skip, text
-                # restart — and only returns to the outer loop at '<'
-                # or EOF. Every committed step is exactly what the
-                # stepping handlers would have committed.
+                # flush at byte fpos, whitespace skip, text restart — and
+                # only returns to the outer loop at '<' or EOF. Every
+                # committed step is exactly what the stepping handlers
+                # would have committed.
                 if b0 == 0x0A:
-                    fll, flc, fpos = ll, lc, lcp
+                    fpos = lcp
                     do_nl = True
                 else:
                     do_nl = False
@@ -803,24 +805,41 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                 while True:
                     if do_nl:
                         do_nl = False
-                        # newline flushes text at (fll, flc, fpos)
+                        # newline flushes text at byte fpos (_mat inlined;
+                        # skipped entirely when Text events are off — the
+                        # hydrate has no side effects)
                         if tx_on:
                             tx_on = False
-                            if not (tx_h0 == fpos and not tx_val):
-                                val, ok = _mat(tx_val, buf, tx_h0, fpos)
-                                if ev_text and ok:
+                            if ev_text and not (tx_h0 == fpos and not tx_val):
+                                h0 = tx_h0
+                                ok = True
+                                if fpos > h0:
+                                    val = tx_val + buf[h0:fpos]
+                                elif h0 > fpos:
+                                    val = tx_val
+                                    ok = len(val) > 0
+                                elif h0 > 0:
+                                    val = tx_val + buf[h0 : h0 + 1]
+                                else:
+                                    val = tx_val
+                                if ok:
                                     append((0, seq, None, val, None, None, None, None,
-                                            None, None, tx_sl, tx_sc, fll, flc, None, None,
-                                            None, None, tx_b0, fpos))
+                                            None, None, anchors and tx_sa, 0,
+                                            anchors and fpos, 0, nil, nil,
+                                            nil, nil, tx_b0, fpos))
                                     seq += 1
                         state = S_SKIP_WS
                         if cursor >= n:
                             break
                         g = buf[cursor]
                         if g <= 32:
-                            cursor, line, ch, lcp, done = _skipws(buf, n, cursor, line, ch)
-                            if not done:
+                            m = RE_NON_WS.search(buf, cursor)
+                            if m is None:
+                                lcp = n - 1 if n else 0
+                                cursor = n
                                 break  # EOF inside whitespace: stay SKIP_WS
+                            cursor = m.start()
+                            lcp = cursor - 1 if cursor else 0
                             g = buf[cursor]
                         # consume the first non-ws grapheme (SKIP_WS
                         # done-arm; its tx reset is a no-op — the text
@@ -828,9 +847,6 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         gl2 = GL[g] if g >= 0x80 else 1
                         if cursor + gl2 > n:
                             break
-                        ll = line
-                        lc = ch
-                        ch += 2 if gl2 == 4 else 1
                         lcp = cursor
                         cursor += gl2
                         state = S_BEGIN_WS
@@ -842,11 +858,10 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         if want_text:
                             tx_on = True
                             tx_val = b""
-                            tx_sl = line
-                            tx_sc = lc
                             tx_h0 = lcp
                             tx_h1 = lcp
                             tx_b0 = lcp
+                            tx_sa = lcp
                         state = S_TEXT
                         # ---- emulate the DISPATCH of the next grapheme
                         # (the restart grapheme itself is never re-run
@@ -858,9 +873,6 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                             break  # EOF right after restart: quirk flush
                         y = buf[cursor]
                         if y == 0x3C:
-                            ll = line
-                            lc = ch
-                            ch += 1
                             lcp = cursor
                             cursor += 1
                             state = S_LT
@@ -868,17 +880,12 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         gly = GL[y] if y >= 0x80 else 1
                         if cursor + gly > n:
                             break
-                        ll = line
-                        lc = ch
                         if y == 0x0A:
-                            line += 1
-                            ch = 0
                             lcp = cursor
                             cursor += 1
-                            fll, flc, fpos = ll, lc, lcp
+                            fpos = lcp
                             do_nl = True
                             continue
-                        ch += 2 if gly == 4 else 1
                         lcp = cursor
                         cursor += gly
                         # fall through: bulk scan from after y, exactly
@@ -889,39 +896,24 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         pos = m.start()
                         if buf[pos] == 0x3C:
                             if pos != cursor:
-                                ll = line
-                                lc = ch
-                                line, ch = _advr(buf, asc, cursor, pos, line, ch)
                                 lcp = pos - 1
                                 cursor = pos
                             if tx_on:
                                 tx_h1 = cursor
                             # fuse the '<' step (parser.rs:586-589):
-                            # consume it with exact next() bookkeeping;
-                            # the following grapheme dispatches into LT
-                            ll = line
-                            lc = ch
-                            ch += 1
+                            # consume it; the following grapheme
+                            # dispatches into LT
                             lcp = cursor
                             cursor += 1
                             state = S_LT
                             break
                         # '\n': consume it inline and loop
-                        if pos != cursor:
-                            line, ch = _advr(buf, asc, cursor, pos, line, ch)
-                        fll = line
-                        flc = ch
                         fpos = pos
-                        line += 1
-                        ch = 0
                         lcp = pos
                         cursor = pos + 1
                         do_nl = True
                         continue
                     if cursor < n:
-                        ll = line
-                        lc = ch
-                        line, ch = _advr(buf, asc, cursor, n, line, ch)
                         lcp = n - _last_gl(buf, n)
                         cursor = n
                     if tx_on:
@@ -935,29 +927,23 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
             if st == S_ATTRIB:
                 if b0 < 33:
                     # FSM consumes one ws grapheme per call with no side
-                    # effects; intermediate ll/lc/lcp are dead, so bulk-skip
+                    # effects; intermediate lcp values are dead, so
+                    # bulk-skip the whole run
                     m = RE_NON_WS.search(buf, cursor)
                     pos = m.start() if m else n
                     if pos > cursor:
-                        nl = buf.count(b"\n", cursor, pos)
-                        if nl:
-                            line += nl
-                            ch = pos - buf.rfind(b"\n", cursor, pos) - 1
-                        else:
-                            ch += pos - cursor
                         lcp = pos - 1
                         cursor = pos
                     break
-                at[13] = cursor - 1 if cursor >= 1 else 0
+                at[5] = cursor - 1 if cursor >= 1 else 0
                 if b0 == 0x3E:
                     state = -1  # handled by shared open-tag emit below
                 elif b0 == 0x2F:
                     state = S_OPEN_SLASH
                     break
                 else:
-                    at[0] = line
-                    at[1] = ch - 1 if ch >= 1 else 0
-                    at[4] = lcp
+                    at[0] = lcp
+                    at[6] = cursor
                     # ---- fused fast path: whole attribute lists ----
                     # loops over name="value" pairs and their separators;
                     # every committed step is exactly what the stepping
@@ -976,13 +962,9 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                             break
                         pos = m.start()
                         if pos > cursor:
-                            line, ch = _advr(buf, asc, cursor, pos, line, ch)
                             cursor = pos
-                        at[2] = line
-                        at[3] = ch
-                        at[5] = cursor
+                        at[1] = at[7] = cursor
                         # consume '=' (name.end stays; header.1 untouched)
-                        ch += 1
                         cursor += 1
                         if cursor >= n:
                             state = S_ATTRIB_VAL
@@ -992,40 +974,62 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                             state = S_ATTRIB_VAL
                             break
                         # consume the opening quote
-                        ch += 1
                         cursor += 1
-                        at[6] = line
-                        at[7] = ch
-                        at[10] = cursor
-                        at[12] = 8 if q == 0x22 else 4
+                        at[2] = at[8] = cursor
+                        at[4] = 8 if q == 0x22 else 4
                         cpos = buf.find(q, cursor)
                         if cpos < 0:
                             quote = q
                             state = S_ATTRIB_VAL_Q
                             break
                         # value span + closing quote
-                        if cpos > cursor:
-                            line, ch = _advr(buf, asc, cursor, cpos, line, ch)
-                        ch += 1
-                        lcp = cpos
+                        lcp = at[10] = cpos
                         cursor = cpos + 1
-                        at[8] = line
-                        at[9] = ch - 1 if ch >= 1 else 0
                         h1 = cursor - 1
-                        if h1 == at[10]:
-                            at[11] = h1 - 1 if h1 >= 1 else 0
+                        if h1 == at[2]:
+                            at[3] = h1 - 1 if h1 >= 1 else 0
                         else:
-                            at[11] = h1
-                        nval, nok = _mat(b"", buf, at[4], at[5])
-                        vval, vok = _mat(b"", buf, at[10], at[11])
-                        if ev_attr and (nok or vok):
-                            append((6, seq, None, None, nval,
-                                    vval, at[12], None, None, None,
-                                    at[0], at[1], at[8], at[9],
-                                    at[2], at[3], at[6], at[7],
-                                    at[13], cursor))
-                            seq += 1
-                        at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
+                            at[3] = h1
+                        # _mat(name) / _mat(value) inlined on the hot
+                        # attribute path; skipped when Attribute events
+                        # are off (the hydrate has no side effects)
+                        if ev_attr:
+                            h0 = at[0]
+                            h1 = at[1]
+                            if h1 > h0:
+                                nval = buf[h0:h1]
+                                nok = True
+                            elif h0 > h1:
+                                nval = b""
+                                nok = False
+                            elif h0 > 0:
+                                nval = buf[h0 : h0 + 1]
+                                nok = True
+                            else:
+                                nval = b""
+                                nok = True
+                            h0 = at[2]
+                            h1 = at[3]
+                            if h1 > h0:
+                                vval = buf[h0:h1]
+                                vok = True
+                            elif h0 > h1:
+                                vval = b""
+                                vok = False
+                            elif h0 > 0:
+                                vval = buf[h0 : h0 + 1]
+                                vok = True
+                            else:
+                                vval = b""
+                                vok = True
+                            if nok or vok:
+                                append((6, seq, None, None, nval,
+                                        vval, at[4], None, None, None,
+                                        anchors and at[6], k1, anchors and at[10], 0,
+                                        anchors and at[7], 0, anchors and at[8],
+                                        anchors and at[9], at[5], cursor))
+                                seq += 1
+                        at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
                         quote = 0
                         state = S_ATTRIB_VAL_CLOSED
                         # ---- separator peek (VAL_CLOSED arms inline) ----
@@ -1033,36 +1037,24 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                             break
                         sep = buf[cursor]
                         if sep == 0x3E:  # '>' closes the tag
-                            ll = line
-                            lc = ch
-                            ch += 1
                             lcp = cursor
                             cursor += 1
-                            tg[5] = line
-                            tg[6] = ch
-                            tg[10] = cursor
+                            tg[4] = cursor
                             if ev_ot:
                                 nm = _name_mat(buf, tg)
                                 tg[2] = nm
                                 tg[0] = tg[1] = 0
                                 append((7, seq, nm.decode("utf-8", "replace"),
                                         None, None, None, None, False, None, None,
-                                        tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7],
-                                        tg[8], tg[9], tg[10]))
+                                        anchors and tg[5], 0, 0, 0, anchors and tg[4],
+                                        0, anchors and tg[6], 0, tg[3], tg[4]))
                                 seq += 1
                             tags.append(tg)
-                            tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
+                            tg = [0, 0, None, 0, 0, 0, 0]
                             state = S_BEGIN_WS
                             break
                         if sep < 33:
                             # one ws grapheme: VAL_CLOSED -> ATTRIB
-                            ll = line
-                            lc = ch
-                            if sep == 0x0A:
-                                line += 1
-                                ch = 0
-                            else:
-                                ch += 1
                             lcp = cursor
                             cursor += 1
                             state = S_ATTRIB
@@ -1070,12 +1062,6 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                             if cursor < n and buf[cursor] <= 32:
                                 m2 = RE_NON_WS.search(buf, cursor)
                                 pos2 = m2.start() if m2 else n
-                                nl = buf.count(b"\n", cursor, pos2)
-                                if nl:
-                                    line += nl
-                                    ch = pos2 - buf.rfind(b"\n", cursor, pos2) - 1
-                                else:
-                                    ch += pos2 - cursor
                                 lcp = pos2 - 1
                                 cursor = pos2
                             if cursor >= n:
@@ -1085,46 +1071,34 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                             if cursor + gl2 > n:
                                 break
                             # consume the next grapheme (ATTRIB dispatch)
-                            ll = line
-                            lc = ch
-                            if nb == 0x0A:
-                                line += 1
-                                ch = 0
-                            else:
-                                ch += 2 if gl2 == 4 else 1
                             lcp = cursor
                             cursor += gl2
-                            at[13] = cursor - 1 if cursor >= 1 else 0
+                            at[5] = cursor - 1 if cursor >= 1 else 0
                             if nb == 0x3E:
-                                tg[5] = line
-                                tg[6] = ch
-                                tg[10] = cursor
+                                tg[4] = cursor
                                 if ev_ot:
                                     nm = _name_mat(buf, tg)
                                     tg[2] = nm
                                     tg[0] = tg[1] = 0
                                     append((7, seq, nm.decode("utf-8", "replace"),
                                             None, None, None, None, False, None, None,
-                                            tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7],
-                                            tg[8], tg[9], tg[10]))
+                                            anchors and tg[5], 0, 0, 0,
+                                            anchors and tg[4], 0, anchors and tg[6], 0,
+                                            tg[3], tg[4]))
                                     seq += 1
                                 tags.append(tg)
-                                tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
+                                tg = [0, 0, None, 0, 0, 0, 0]
                                 state = S_BEGIN_WS
                                 break
                             if nb == 0x2F:
                                 state = S_OPEN_SLASH
                                 break
-                            at[0] = line
-                            at[1] = ch - 1 if ch >= 1 else 0
-                            at[4] = lcp
+                            at[0] = lcp
+                            at[6] = cursor
                             b0 = nb
                             state = S_ATTRIB_NAME
                             continue  # next attribute
                         if sep == 0x2F:
-                            ll = line
-                            lc = ch
-                            ch += 1
                             lcp = cursor
                             cursor += 1
                             state = S_OPEN_SLASH
@@ -1133,19 +1107,11 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         gl2 = GL[sep] if sep >= 0x80 else 1
                         if cursor + gl2 > n:
                             break
-                        ll = line
-                        lc = ch
-                        if sep == 0x0A:
-                            line += 1
-                            ch = 0
-                        else:
-                            ch += 2 if gl2 == 4 else 1
                         lcp = cursor
                         cursor += gl2
-                        at[4] = lcp
-                        at[13] = lcp
-                        at[0] = line
-                        at[1] = ch - 1 if ch >= 1 else 0
+                        at[0] = lcp
+                        at[5] = lcp
+                        at[6] = cursor
                         b0 = sep
                         state = S_ATTRIB_NAME
                         continue  # next attribute
@@ -1153,93 +1119,85 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         continue  # redispatch current grapheme
                     break  # fused loop fully handled this span
                 # process_open_tag(False) — '>' in attrib position
-                tg[5] = line
-                tg[6] = ch
-                tg[10] = cursor
+                tg[4] = cursor
                 if ev_ot:
                     nm = _name_mat(buf, tg)
                     tg[2] = nm
                     tg[0] = tg[1] = 0
                     append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                            None, None, False, None, None, tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7], tg[8], tg[9], tg[10]))
+                            None, None, False, None, None, anchors and tg[5], 0,
+                            0, 0, anchors and tg[4], 0, anchors and tg[6], 0,
+                            tg[3], tg[4]))
                     seq += 1
                 tags.append(tg)
-                tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
+                tg = [0, 0, None, 0, 0, 0, 0]
                 state = S_BEGIN_WS
                 break
 
             # ---------------- ATTRIB_NAME ----------------
             if st == S_ATTRIB_NAME:
                 if b0 == 0x3D:  # '='
-                    # sets name.end + name.byte_range.1 only — header.1 is
-                    # deliberately left alone (parser.rs:942-946)
-                    at[2] = line
-                    at[3] = ch - 1 if ch >= 1 else 0
+                    # sets name.end only — header.1 is deliberately left
+                    # alone (parser.rs:942-946)
+                    at[7] = lcp
                     state = S_ATTRIB_VAL
                     break
                 if b0 == 0x3E:
-                    at[2] = line
-                    at[3] = ch - 1 if ch >= 1 else 0
-                    # note: name.h1 left as-is (mirrors FSM: header.1 not
-                    # set on this path → hydrate uses stale h1)
+                    # name.h1 left as-is (mirrors FSM: header.1 not set
+                    # on this path → hydrate uses stale h1);
                     # process_attribute then process_open_tag
-                    nval, nok = _mat(b"", buf, at[4], at[5])
-                    vval, vok = _mat(b"", buf, at[10], at[11])
+                    at[7] = lcp
+                    nval, nok = _mat(b"", buf, at[0], at[1])
+                    vval, vok = _mat(b"", buf, at[2], at[3])
                     if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[12], None,
-                                None, None, at[0], at[1], at[8], at[9], at[2], at[3],
-                                at[6], at[7], at[13], cursor))
+                        append((6, seq, None, None, nval, vval, at[4], None,
+                                None, None, anchors and at[6], k1, anchors and at[10], 0,
+                                anchors and at[7], 0, anchors and at[8],
+                                anchors and at[9], at[5], cursor))
                         seq += 1
-                    at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-                    tg[5] = line
-                    tg[6] = ch
-                    tg[10] = cursor
+                    at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
+                    tg[4] = cursor
                     if ev_ot:
                         nm = _name_mat(buf, tg)
                         tg[2] = nm
                         tg[0] = tg[1] = 0
                         append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7], tg[8], tg[9], tg[10]))
+                                None, None, False, None, None, anchors and tg[5], 0,
+                                0, 0, anchors and tg[4], 0, anchors and tg[6], 0,
+                                tg[3], tg[4]))
                         seq += 1
                     tags.append(tg)
-                    tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
+                    tg = [0, 0, None, 0, 0, 0, 0]
                     state = S_BEGIN_WS
                     break
                 if b0 < 33:
-                    if b0 == 0x0A:
-                        at[2] = ll
-                        at[3] = lc
-                    else:
-                        at[2] = line
-                        at[3] = ch - 1 if ch >= 1 else 0
-                    at[5] = lcp
+                    at[1] = at[7] = lcp
                     state = S_ATTRIB_NAME_WS
                     continue  # redispatch
-                k, cursor2, line2, ch2, lcp2, lastb, found = _tuof(buf, n, asc, RE_ATTR_NAME_END, ATTRIBUTE_NAME_END, cursor, line, ch, False
+                k, cursor2, lcp2, lastb, found = _tuof(
+                    buf, n, RE_ATTR_NAME_END, ATTRIBUTE_NAME_END, cursor, False
                 )
                 if k == 2:
-                    ll, lc = line, ch
-                    cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
-                at[2] = line
-                at[3] = ch
-                at[5] = cursor
+                    cursor, lcp = cursor2, lcp2
+                at[1] = at[7] = cursor
                 break
 
             # ---------------- ATTRIB_NAME_WS ----------------
             if st == S_ATTRIB_NAME_WS:
                 if b0 < 33:
-                    cursor, line, ch, lcp, _d = _skipws(buf, n, cursor, line, ch)
+                    cursor, lcp, _d = _skipws(buf, n, cursor)
                     break
                 if b0 != 0x3D:
                     # process_attribute (bare attribute)
-                    nval, nok = _mat(b"", buf, at[4], at[5])
-                    vval, vok = _mat(b"", buf, at[10], at[11])
+                    nval, nok = _mat(b"", buf, at[0], at[1])
+                    vval, vok = _mat(b"", buf, at[2], at[3])
                     if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[12], None,
-                                None, None, at[0], at[1], at[8], at[9], at[2], at[3],
-                                at[6], at[7], at[13], cursor))
+                        append((6, seq, None, None, nval, vval, at[4], None,
+                                None, None, anchors and at[6], k1, anchors and at[10], 0,
+                                anchors and at[7], 0, anchors and at[8],
+                                anchors and at[9], at[5], cursor))
                         seq += 1
-                    at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
+                    at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
                 if b0 == 0x3D:
                     state = S_ATTRIB_VAL
                     break
@@ -1247,23 +1205,22 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     state = S_OPEN_SLASH
                     break
                 if b0 == 0x3E:
-                    tg[5] = line
-                    tg[6] = ch
-                    tg[10] = cursor
+                    tg[4] = cursor
                     if ev_ot:
                         nm = _name_mat(buf, tg)
                         tg[2] = nm
                         tg[0] = tg[1] = 0
                         append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7], tg[8], tg[9], tg[10]))
+                                None, None, False, None, None, anchors and tg[5], 0,
+                                0, 0, anchors and tg[4], 0, anchors and tg[6], 0,
+                                tg[3], tg[4]))
                         seq += 1
                     tags.append(tg)
-                    tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
+                    tg = [0, 0, None, 0, 0, 0, 0]
                     state = S_BEGIN_WS
                     break
-                at[0] = line
-                at[1] = ch - 1 if ch >= 1 else 0
-                at[4] = lcp
+                at[0] = lcp
+                at[6] = cursor
                 state = S_ATTRIB_NAME
                 continue  # redispatch
 
@@ -1273,63 +1230,52 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     m = RE_NON_WS.search(buf, cursor)
                     pos = m.start() if m else n
                     if pos > cursor:
-                        nl = buf.count(b"\n", cursor, pos)
-                        if nl:
-                            line += nl
-                            ch = pos - buf.rfind(b"\n", cursor, pos) - 1
-                        else:
-                            ch += pos - cursor
                         lcp = pos - 1
                         cursor = pos
                     break
-                at[6] = line
-                at[7] = ch
-                at[10] = cursor
+                at[2] = at[8] = cursor
                 if b0 == 0x22 or b0 == 0x27:
                     quote = b0
                     state = S_ATTRIB_VAL_Q
-                    at[12] = 8 if b0 == 0x22 else 4
+                    at[4] = 8 if b0 == 0x22 else 4
                 elif b0 == 0x7B:  # '{'
                     state = S_JSX
-                    at[12] = 1
+                    at[4] = 1
                     brace_ct += 1
                 else:
-                    at[10] = lcp
-                    at[6] = line
-                    at[7] = ch - 1 if ch >= 1 else 0
+                    at[2] = lcp
+                    at[9] = 1
                     state = S_ATTRIB_VAL_UNQ
-                    at[12] = 2
+                    at[4] = 2
                     continue  # redispatch
                 break
 
             # ---------------- ATTRIB_VAL_Q ----------------
             if st == S_ATTRIB_VAL_Q:
                 if b0 == quote:
-                    at[8] = line
-                    at[9] = ch - 1 if ch >= 1 else 0
+                    at[10] = lcp
                     h1 = cursor - 1 if cursor >= 1 else 0
-                    if h1 == at[10]:
-                        at[11] = h1 - 1 if h1 >= 1 else 0
+                    if h1 == at[2]:
+                        at[3] = h1 - 1 if h1 >= 1 else 0
                     else:
-                        at[11] = h1
+                        at[3] = h1
                     # process_attribute
-                    nval, nok = _mat(b"", buf, at[4], at[5])
-                    vval, vok = _mat(b"", buf, at[10], at[11])
+                    nval, nok = _mat(b"", buf, at[0], at[1])
+                    vval, vok = _mat(b"", buf, at[2], at[3])
                     if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[12], None,
-                                None, None, at[0], at[1], at[8], at[9], at[2], at[3],
-                                at[6], at[7], at[13], cursor))
+                        append((6, seq, None, None, nval, vval, at[4], None,
+                                None, None, anchors and at[6], k1, anchors and at[10], 0,
+                                anchors and at[7], 0, anchors and at[8],
+                                anchors and at[9], at[5], cursor))
                         seq += 1
-                    at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
+                    at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
                     quote = 0
                     state = S_ATTRIB_VAL_CLOSED
                     break
-                k, cursor2, line2, ch2, lcp2, lastb, ne = _tu(buf, n, asc, quote, cursor, line, ch, False
-                )
+                k, cursor2, lcp2, lastb, ne = _tu(buf, n, quote, cursor, False)
                 if k == 2:
-                    ll, lc = line, ch
-                    cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
-                at[11] = cursor
+                    cursor, lcp = cursor2, lcp2
+                at[3] = cursor
                 break
 
             # ---------------- ATTRIB_VAL_CLOSED ----------------
@@ -1338,76 +1284,74 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     state = S_ATTRIB
                     break
                 if b0 == 0x3E:
-                    tg[5] = line
-                    tg[6] = ch
-                    tg[10] = cursor
+                    tg[4] = cursor
                     if ev_ot:
                         nm = _name_mat(buf, tg)
                         tg[2] = nm
                         tg[0] = tg[1] = 0
                         append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7], tg[8], tg[9], tg[10]))
+                                None, None, False, None, None, anchors and tg[5], 0,
+                                0, 0, anchors and tg[4], 0, anchors and tg[6], 0,
+                                tg[3], tg[4]))
                         seq += 1
                     tags.append(tg)
-                    tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
+                    tg = [0, 0, None, 0, 0, 0, 0]
                     state = S_BEGIN_WS
                     break
                 if b0 == 0x2F:
                     state = S_OPEN_SLASH
                     break
                 # attr.name.h0 = lcp; attr.b0 = name.b0 = lcp (chunk_offset 0)
-                at[4] = lcp
-                at[13] = lcp
-                at[0] = line
-                at[1] = ch - 1 if ch >= 1 else 0
+                at[0] = lcp
+                at[5] = lcp
+                at[6] = cursor
                 state = S_ATTRIB_NAME
                 continue  # redispatch
 
             # ---------------- ATTRIB_VAL_UNQ ----------------
             if st == S_ATTRIB_VAL_UNQ:
                 if b0 < 33:
-                    cursor, line, ch, lcp, _d = _skipws(buf, n, cursor, line, ch)
+                    cursor, lcp, _d = _skipws(buf, n, cursor)
                     break
                 byte = b0
                 if byte not in ATTRIBUTE_NAME_END:
                     attr_end = False
-                    k, cursor2, line2, ch2, lcp2, lastb, found = _tuof(buf, n, asc, RE_ATTR_VALUE_END, ATTRIBUTE_VALUE_END, cursor, line, ch, False
+                    k, cursor2, lcp2, lastb, found = _tuof(
+                        buf, n, RE_ATTR_VALUE_END, ATTRIBUTE_VALUE_END, cursor, False
                     )
                     if k != 0:
                         byte = lastb
                         attr_end = found
                         if k == 2:
-                            ll, lc = line, ch
-                            cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
-                    at[11] = cursor
-                    at[8] = line
-                    at[9] = ch
+                            cursor, lcp = cursor2, lcp2
+                    at[3] = at[10] = cursor
                     if not attr_end and b0 != byte:
                         break
                 # process_attribute
-                nval, nok = _mat(b"", buf, at[4], at[5])
-                vval, vok = _mat(b"", buf, at[10], at[11])
+                nval, nok = _mat(b"", buf, at[0], at[1])
+                vval, vok = _mat(b"", buf, at[2], at[3])
                 if ev_attr and (nok or vok):
-                    append((6, seq, None, None, nval, vval, at[12], None,
-                            None, None, at[0], at[1], at[8], at[9], at[2], at[3],
-                            at[6], at[7], at[13], cursor))
+                    append((6, seq, None, None, nval, vval, at[4], None,
+                            None, None, anchors and at[6], k1, anchors and at[10], 0,
+                            anchors and at[7], 0, anchors and at[8],
+                            anchors and at[9], at[5], cursor))
                     seq += 1
-                at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
+                at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
                 if byte == 0x2F:
                     state = S_OPEN_SLASH
                 elif byte == 0x3E:
-                    tg[5] = line
-                    tg[6] = ch
-                    tg[10] = cursor
+                    tg[4] = cursor
                     if ev_ot:
                         nm = _name_mat(buf, tg)
                         tg[2] = nm
                         tg[0] = tg[1] = 0
                         append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7], tg[8], tg[9], tg[10]))
+                                None, None, False, None, None, anchors and tg[5], 0,
+                                0, 0, anchors and tg[4], 0, anchors and tg[6], 0,
+                                tg[3], tg[4]))
                         seq += 1
                     tags.append(tg)
-                    tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
+                    tg = [0, 0, None, 0, 0, 0, 0]
                     state = S_BEGIN_WS
                 else:
                     state = S_ATTRIB
@@ -1417,16 +1361,16 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
             if st == S_OPEN_SLASH:
                 if b0 == 0x3E:
                     # process_open_tag(True): self-closing
-                    tg[5] = line
-                    tg[6] = ch
-                    tg[10] = cursor
+                    tg[4] = cursor
                     nm = None
                     if ev_ot:
                         nm = _name_mat(buf, tg)
                         tg[2] = nm
                         tg[0] = tg[1] = 0
                         append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, True, None, None, tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7], tg[8], tg[9], tg[10]))
+                                None, None, True, None, None, anchors and tg[5], 0,
+                                0, 0, anchors and tg[4], 0, anchors and tg[6], 0,
+                                tg[3], tg[4]))
                         seq += 1
                     if ev_ct:
                         if nm is None:
@@ -1434,9 +1378,11 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                             tg[2] = nm
                             tg[0] = tg[1] = 0
                         append((8, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, True, None, None, tg[3], tg[4], 0, 0, tg[5], tg[6], tg[7], tg[8], tg[9], tg[10]))
+                                None, None, True, None, None, anchors and tg[5], 0,
+                                0, 0, anchors and tg[4], 0, anchors and tg[6], 0,
+                                tg[3], tg[4]))
                         seq += 1
-                    tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
+                    tg = [0, 0, None, 0, 0, 0, 0]
                     state = S_BEGIN_WS
                     break
                 state = S_ATTRIB
@@ -1447,13 +1393,12 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                 if b0 > 32:
                     done = True
                 else:
-                    cursor, line, ch, lcp, done = _skipws(buf, n, cursor, line, ch)
+                    cursor, lcp, done = _skipws(buf, n, cursor)
                 if done:
                     if tx_on:
                         tx_val = b""
-                        tx_sl = line
-                        tx_sc = ch
                         tx_h0 = cursor
+                        tx_sa = cursor
                     state = S_BEGIN_WS
                     if b0 > 32:
                         continue  # redispatch current grapheme
@@ -1463,9 +1408,6 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     gl2 = GL[nb] if nb >= 0x80 else 1
                     if cursor + gl2 > n:
                         break
-                    ll = line
-                    lc = ch
-                    ch += 2 if gl2 == 4 else 1
                     lcp = cursor
                     cursor += gl2
                     b0 = nb
@@ -1475,19 +1417,17 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
             # ---------------- MARKUP_DECL ----------------
             if st == S_MARKUP_DECL:
                 if b0 not in ENTITY_CAPTURE_END:
-                    k, cursor2, line2, ch2, lcp2, lastb, found = _tuof(buf, n, asc, RE_ENTITY_CAPTURE_END, ENTITY_CAPTURE_END,
-                        cursor, line, ch, False,
+                    k, cursor2, lcp2, lastb, found = _tuof(
+                        buf, n, RE_ENTITY_CAPTURE_END, ENTITY_CAPTURE_END, cursor, False
                     )
                     if k == 2:
-                        ll, lc = line, ch
-                        cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
+                        cursor, lcp = cursor2, lcp2
                 md_h1 = cursor
                 md_b1 = cursor
                 md_val, md_h0, md_h1 = _gvs(md_val, buf, n, md_h0, md_h1)
                 sl_len = len(md_val)
                 if sl_len >= 4 and md_val[:4] == b"<!--":
-                    md_sl = line
-                    md_sc = ch - 4 if ch >= 4 else 0
+                    md_sa = cursor
                     md_val = b""
                     md_h0 = cursor
                     md_h1 = 0
@@ -1495,8 +1435,7 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     state = S_COMMENT
                     break
                 if sl_len >= 9 and md_val[:9].lower() == b"<![cdata[":
-                    md_sl = line
-                    md_sc = ch - 9 if ch >= 9 else 0
+                    md_sa = cursor
                     md_b1 = cursor - 9 if cursor >= 9 else 0
                     md_val = b""
                     md_h0 = cursor
@@ -1504,10 +1443,9 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     state = S_CDATA
                     break
                 if sl_len >= 9 and md_val[:9].lower() == b"<!doctype":
-                    md_sl = line
-                    md_sc = ch - 9 if ch >= 9 else 0
+                    md_sa = cursor
                     md_b1 = cursor - 9 if cursor >= 9 else 0
-                    cursor, line, ch, lcp, _d = _skipws(buf, n, cursor, line, ch)
+                    cursor, lcp, _d = _skipws(buf, n, cursor)
                     md_val = b""
                     md_h0 = cursor
                     md_h1 = 0
@@ -1518,10 +1456,10 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     len(btc) == 3 and btc.lower() == b"<!d"
                 ):
                     me_on = True
-                    me_sl = line
-                    me_sc = ch - 2 if ch >= 2 else 0
+                    me_sa = cursor
+                    me_sk = 2
                     me_b0 = 0
-                    cursor, line, ch, lcp, _d = _skipws(buf, n, cursor, line, ch)
+                    cursor, lcp, _d = _skipws(buf, n, cursor)
                     me_h0 = cursor
                     me_h1 = 0
                     state = S_ENTITY
@@ -1534,19 +1472,17 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
             # ---------------- COMMENT ----------------
             if st == S_COMMENT:
                 if b0 != 0x3E:
-                    k, cursor2, line2, ch2, lcp2, lastb, ne = _tu(buf, n, asc, 0x3E, cursor, line, ch, True
-                    )
+                    k, cursor2, lcp2, lastb, ne = _tu(buf, n, 0x3E, cursor, True)
                     if k == 2:
-                        ll, lc = line, ch
-                        cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
+                        cursor, lcp = cursor2, lcp2
                 md_h1 = cursor
                 md_b1 = cursor
                 md_val, md_h0, md_h1 = _gvs(md_val, buf, n, md_h0, md_h1)
                 if len(md_val) > 2 and md_val[-3:] == b"-->":
                     if ev_comment:
                         append((4, seq, None, md_val[:-3], None, None, None, None,
-                                None, None, md_sl, md_sc, line, ch, None, None, None,
-                                None, md_b0, md_b1))
+                                None, None, anchors and md_sa, k4, anchors and cursor, 0,
+                                nil, nil, nil, nil, md_b0, md_b1))
                         seq += 1
                     md_on = False
                     md_val = b""
@@ -1559,19 +1495,17 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
             # ---------------- CDATA ----------------
             if st == S_CDATA:
                 if b0 != 0x3E:
-                    k, cursor2, line2, ch2, lcp2, lastb, ne = _tu(buf, n, asc, 0x3E, cursor, line, ch, True
-                    )
+                    k, cursor2, lcp2, lastb, ne = _tu(buf, n, 0x3E, cursor, True)
                     if k == 2:
-                        ll, lc = line, ch
-                        cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
+                        cursor, lcp = cursor2, lcp2
                 md_h1 = cursor
                 md_b1 = cursor
                 md_val, md_h0, md_h1 = _gvs(md_val, buf, n, md_h0, md_h1)
                 if len(md_val) > 2 and md_val[-3:] == b"]]>":
                     if ev_cdata:
                         append((9, seq, None, md_val[:-3], None, None, None, None,
-                                None, None, md_sl, md_sc, line, ch, None, None, None,
-                                None, md_b0, md_b1))
+                                None, None, anchors and md_sa, k9, anchors and cursor, 0,
+                                nil, nil, nil, nil, md_b0, md_b1))
                         seq += 1
                     state = S_BEGIN_WS
                     md_val = b""
@@ -1585,29 +1519,28 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
             if st == S_DOCTYPE or st == S_DOCTYPE_ENTITY:
                 byte = b0
                 if st != S_DOCTYPE_ENTITY and byte not in DOCTYPE_VALUE_END:
-                    k, cursor2, line2, ch2, lcp2, lastb, found = _tuof(buf, n, asc, RE_DOCTYPE_VALUE_END, DOCTYPE_VALUE_END,
-                        cursor, line, ch, True,
+                    k, cursor2, lcp2, lastb, found = _tuof(
+                        buf, n, RE_DOCTYPE_VALUE_END, DOCTYPE_VALUE_END, cursor, True
                     )
                     if k != 0:
                         byte = lastb
                         if k == 2:
-                            ll, lc = line, ch
-                            cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
+                            cursor, lcp = cursor2, lcp2
                     md_h1 = cursor
                     md_b1 = cursor
                 if byte not in DOCTYPE_END:
-                    k, cursor2, line2, ch2, lcp2, lastb, found = _tuof(buf, n, asc, RE_DOCTYPE_END, DOCTYPE_END, cursor, line, ch, True
+                    k, cursor2, lcp2, lastb, found = _tuof(
+                        buf, n, RE_DOCTYPE_END, DOCTYPE_END, cursor, True
                     )
                     if k != 0:
                         byte = lastb
                         if k == 2:
-                            ll, lc = line, ch
-                            cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
+                            cursor, lcp = cursor2, lcp2
                 if byte == 0x21:  # '!'
                     state = S_ENTITY
                     me_on = True
-                    me_sl = line
-                    me_sc = ch
+                    me_sa = cursor
+                    me_sk = 0
                     me_h0 = cursor
                     me_h1 = 0
                     me_b0 = cursor
@@ -1618,8 +1551,9 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     md_on = False
                     if ev_doctype and ok:
                         append((3, seq, None, val[:-1] if val else val, None,
-                                None, None, None, None, None, md_sl, md_sc, line, ch,
-                                None, None, None, None, md_b0, md_b1))
+                                None, None, None, None, None, anchors and md_sa, k9,
+                                anchors and cursor, 0,
+                                nil, nil, nil, nil, md_b0, md_b1))
                         seq += 1
                     state = S_BEGIN_WS
                 break
@@ -1628,18 +1562,14 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
             if st == S_ENTITY:
                 byte = b0
                 if byte != 0x3E:
-                    k, cursor2, line2, ch2, lcp2, lastb, ne = _tu(buf, n, asc, 0x3E, cursor, line, ch, True
-                    )
+                    k, cursor2, lcp2, lastb, ne = _tu(buf, n, 0x3E, cursor, True)
                     if k == 2:
-                        ll, lc = line, ch
-                        cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
+                        cursor, lcp = cursor2, lcp2
                         if ne:
                             byte = lastb
                 if byte == 0x3E:
                     me_h1 = cursor - 1 if cursor >= 1 else 0
                     me_b1 = cursor - 1 if cursor >= 1 else 0
-                    me_el = line
-                    me_ec = ch - 1 if ch >= 1 else 0
                     me_on = False
                     if ev_decl:
                         val, ok = _mat(b"", buf, me_h0, me_h1)
@@ -1647,25 +1577,25 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                             # reference dispatches declarations with the
                             # Cdata event code (parser.rs:822-823)
                             append((9, seq, None, val, None, None, None, None,
-                                    None, None, me_sl, me_sc, me_el, me_ec, None, None,
-                                    None, None, me_b0, me_b1))
+                                    None, None, anchors and me_sa, anchors and me_sk,
+                                    anchors and cursor, k1, nil, nil,
+                                    nil, nil, me_b0, me_b1))
                             seq += 1
                     state = S_DOCTYPE_ENTITY if md_on else S_BEGIN_WS
-                    cursor, line, ch, lcp, _d = _skipws(buf, n, cursor, line, ch)
+                    cursor, lcp, _d = _skipws(buf, n, cursor)
                 break
 
             # ---------------- PROC_INST ----------------
             if st == S_PROC_INST:
                 byte = b0
                 if byte not in PROC_INST_TARGET_END:
-                    k, cursor2, line2, ch2, lcp2, lastb, found = _tuof(buf, n, asc, RE_PROC_TARGET_END, PROC_INST_TARGET_END,
-                        cursor, line, ch, True,
+                    k, cursor2, lcp2, lastb, found = _tuof(
+                        buf, n, RE_PROC_TARGET_END, PROC_INST_TARGET_END, cursor, True
                     )
                     if k != 0:
                         byte = lastb
                         if k == 2:
-                            ll, lc = line, ch
-                            cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
+                            cursor, lcp = cursor2, lcp2
                 pi_th1 = cursor
                 if byte == 0x3E:
                     # process_proc_inst
@@ -1676,16 +1606,15 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         tval = tval[2:]
                         cval = cval[: len(cval) - 2] if len(cval) >= 2 else b""
                         append((1, seq, None, None, None, None, None, None,
-                                tval, cval, pi_sl, pi_sc, line, ch, pi_t_el, pi_t_ec,
-                                pi_c_sl, pi_c_sc, pi_b0, cursor))
+                                tval, cval, anchors and pi_b0, 0, anchors and cursor, 0,
+                                anchors and pi_te, k1, anchors and pi_cs, 0,
+                                pi_b0, cursor))
                         seq += 1
                 elif byte < 33:
                     pi_th1 = cursor - 1 if cursor >= 1 else 0
-                    pi_t_el = line
-                    pi_t_ec = ch - 1 if ch >= 1 else 0
-                    cursor, line, ch, lcp, _d = _skipws(buf, n, cursor, line, ch)
-                    pi_c_sl = line
-                    pi_c_sc = ch
+                    pi_te = cursor
+                    cursor, lcp, _d = _skipws(buf, n, cursor)
+                    pi_cs = cursor
                     pi_ch0 = cursor
                     pi_ch1 = 0
                     state = S_PROC_INST_VAL
@@ -1695,11 +1624,9 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
             if st == S_PROC_INST_VAL:
                 byte = b0
                 if byte != 0x3E:
-                    k, cursor2, line2, ch2, lcp2, lastb, ne = _tu(buf, n, asc, 0x3E, cursor, line, ch, True
-                    )
+                    k, cursor2, lcp2, lastb, ne = _tu(buf, n, 0x3E, cursor, True)
                     if k == 2:
-                        ll, lc = line, ch
-                        cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
+                        cursor, lcp = cursor2, lcp2
                         if ne:
                             byte = lastb
                 pi_ch1 = cursor
@@ -1712,8 +1639,9 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     tval = tval[2:]
                     cval = cval[: len(cval) - 2] if len(cval) >= 2 else b""
                     append((1, seq, None, None, None, None, None, None,
-                            tval, cval, pi_sl, pi_sc, line, ch, pi_t_el, pi_t_ec,
-                            pi_c_sl, pi_c_sc, pi_b0, cursor))
+                            tval, cval, anchors and pi_b0, 0, anchors and cursor, 0,
+                            anchors and pi_te, k1, anchors and pi_cs, 0,
+                            pi_b0, cursor))
                     seq += 1
                 break
 
@@ -1724,24 +1652,21 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                 elif b0 == 0x7B:
                     brace_ct += 1
                 if brace_ct == 0:
-                    at[8] = line
-                    at[9] = ch - 1 if ch >= 1 else 0
-                    at[11] = lcp
-                    nval, nok = _mat(b"", buf, at[4], at[5])
-                    vval, vok = _mat(b"", buf, at[10], at[11])
+                    at[3] = at[10] = lcp
+                    nval, nok = _mat(b"", buf, at[0], at[1])
+                    vval, vok = _mat(b"", buf, at[2], at[3])
                     if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[12], None,
-                                None, None, at[0], at[1], at[8], at[9], at[2], at[3],
-                                at[6], at[7], at[13], cursor))
+                        append((6, seq, None, None, nval, vval, at[4], None,
+                                None, None, anchors and at[6], k1, anchors and at[10], 0,
+                                anchors and at[7], 0, anchors and at[8],
+                                anchors and at[9], at[5], cursor))
                         seq += 1
-                    at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
+                    at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
                     state = S_ATTRIB_VAL_CLOSED
                     break
-                k, cursor2, line2, ch2, lcp2, lastb, found = _tuof(buf, n, asc, RE_BRACES, b"{}", cursor, line, ch, False
-                )
+                k, cursor2, lcp2, lastb, found = _tuof(buf, n, RE_BRACES, b"{}", cursor, False)
                 if k == 2:
-                    ll, lc = line, ch
-                    cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
+                    cursor, lcp = cursor2, lcp2
                 break
 
             # ---------------- BEGIN (only if BOM handling fell through) --
@@ -1758,10 +1683,83 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
         if val:
             if ev_text:
                 rows.append((0, seq, None, val, None, None, None, None, None,
-                             None, tx_sl, tx_sc, line, ch, None, None, None, None,
-                             tx_b0, n))
+                             None, anchors and tx_sa, 0, anchors and n, 0, nil,
+                             nil, nil, nil, tx_b0, n))
                 seq += 1
     return rows
+
+
+def resolve_positions(docs: list[bytes], pos: np.ndarray, row_doc=None) -> None:
+    """Map the kernel's (byte anchor, k) position pairs to (line, UTF-16
+    column), in place.
+
+    ``pos`` is a (2, 4, rows) int64 block over the start, end, open_end
+    and close_start positions of ``scan(…, 1)`` rows: ``pos[0]`` holds
+    their byte anchors, ``pos[1]`` the k UTF-16 units to step back. They
+    become the line (newlines before the anchor) and the column (units
+    from the line start to the anchor, minus k, clamped at 0).
+    ``row_doc`` gives each row's index in ``docs`` (None: one document);
+    a row with -1 already carries positions (an FSM fallback row) and is
+    left as it is."""
+    buf = b"".join(docs)
+    # offsets at which a line starts: 0 and every byte after a newline
+    starts = np.flatnonzero(np.frombuffer(b"\n" + buf, np.uint8) == 10)
+    anchor, back = pos
+    if row_doc is None:
+        rows = slice(None)
+        count = starts.searchsorted(anchor, "right")
+        line0 = 1
+        line_start = starts[count - 1]
+    else:
+        rows = np.flatnonzero(row_doc >= 0)
+        doc_starts = np.zeros(len(docs), np.int64)
+        np.cumsum([len(d) for d in docs[:-1]], out=doc_starts[1:])
+        base = doc_starts[row_doc[rows]]
+        anchor = anchor[:, rows] + base
+        count = starts.searchsorted(anchor, "right")
+        line0 = starts.searchsorted(base, "right")
+        line_start = np.maximum(starts[count - 1], base)
+    if buf.isascii():
+        col = anchor - line_start
+    else:
+        units = np.zeros(len(buf) + 1, np.int64)
+        np.cumsum(UNITS[np.frombuffer(buf, np.uint8)], out=units[1:])
+        col = units[anchor] - units[line_start]
+    col -= back[:, rows]
+    back[:, rows] = np.maximum(col, 0, out=col)
+    pos[0][:, rows] = count - line0
+
+
+# event codes whose rows leave open_end/close_start None: Text,
+# Declaration, Doctype, Comment and Cdata (declarations reuse its code)
+TEXT_LIKE = np.zeros(16, bool)
+TEXT_LIKE[[0, 2, 3, 4, 9]] = True
+
+
+def parse_doc(data: bytes, events: int):
+    """Flat event rows for one single-write document, or None → use FSM."""
+    rows = scan(data, events, 1)
+    if not rows:
+        return rows
+    n = len(rows)
+    cols = list(zip(*rows))
+    # line slots (anchors) then char slots (k), as a (2, 4, n) block
+    packed = struct.pack(f"{8 * n}q", *chain(*cols[10:18:2], *cols[11:18:2]))
+    pos = np.frombuffer(packed, np.int64).reshape(2, 4, n).copy()
+    resolve_positions([data], pos)
+    out = pos.astype(object)
+    out[:, 2:, TEXT_LIKE[np.fromiter(cols[0], np.int64, n)]] = None
+    cols[10:18:2], cols[11:18:2] = out.tolist()
+    return list(zip(*cols))
+
+
+def fsm_rows(data: bytes, events: int) -> list[tuple]:
+    """The streaming FSM's rows for one single-write document."""
+    collector = EventCollector()
+    parser = SaxParser(events=events, handler=collector)
+    parser.write(data)
+    parser.end()
+    return collector.rows
 
 
 def parse_doc_flat(data: bytes, events: int) -> list[tuple]:
@@ -1769,8 +1767,4 @@ def parse_doc_flat(data: bytes, events: int) -> list[tuple]:
     rows = parse_doc(data, events)
     if rows is not None:
         return rows
-    collector = EventCollector()
-    parser = SaxParser(events=events, handler=collector)
-    parser.write(data)
-    parser.end()
-    return collector.rows
+    return fsm_rows(data, events)

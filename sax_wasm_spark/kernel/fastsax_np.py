@@ -1,1476 +1,34 @@
-"""Positions-off fast tokenizer: the extraction-pipeline hot path.
+"""Positions-off entry points: the extraction-pipeline hot path.
 
 ``parse_doc_np(data, events)`` emits the SAME flat event rows as
 ``fastsax.parse_doc`` — same codes, names, values, attribute types,
 self-closing flags, and BYTE offsets — with every line/character
-position field emitted as 0. The boilerplate extractor
-(operators/extract.py) consumes only codes, names, values,
-self_closing, and byte offsets, so this is the mode it runs in; the
-line/char-accurate twin stays the contract for every query that
-surfaces positions (sax_text_events etc.).
-
-Why a sibling and not a flag: line/char tracking is woven through
-every scan (newline counting, UTF-16 column arithmetic, per-grapheme
-updates). A ``positions`` branch at each of those sites costs nearly
-as much as the tracking itself; stripping it wholesale removes
-~1/4 of the interpreter work per byte (the reference kernel gets the
-same effect by simply not subscribing position consumers — its
-position arithmetic is a handful of native adds, ours is interpreted
-Python; see BENCH_BASELINE.md).
-
-Derivation contract (how this file tracks fastsax.py):
-- control flow, scan order, state codes, and every BYTE-offset
-  computation are copied verbatim from fastsax.parse_doc;
-- every read/write of line/ch/ll/lc and every UTF-16 column
-  expression is deleted; `_advr` disappears entirely (it only
-  produced positions);
-- `_tuof/_tu/_skipws` become `_tuof_np/_tu_np/_skipws_np` with the
-  position slots dropped from their signatures/returns;
-- emitted tuples carry literal 0 in the position slots (indices
-  10-17), preserving arity and dtypes.
-
-Equivalence is enforced differentially (tests/test_fastsax_np.py):
-for the fixture corpus, fuzz documents, pathological documents, and
-the synthetic pages corpus, across event masks,
-``parse_doc_np(d, m) == [zero_positions(r) for r in parse_doc(d, m)]``.
-Any edit to fastsax.py's semantics must be mirrored here or that gate
-fails.
+position field emitted as 0 (None slots stay None). It is the one fast
+scanning loop, ``fastsax.scan``, run with its anchors off: no
+position pass runs. The boilerplate extractor (operators/extract.py)
+consumes only codes, names, values, self_closing, and byte offsets, so
+this is the mode it runs in.
 
 Returns None when the document is outside the fast profile (invalid
 UTF-8) — callers fall back to the streaming FSM exactly like
 fastsax.parse_doc_flat does.
-
-States, terminator classes and byte arithmetic mirror
-/root/reference/src/sax/parser.rs (see saxkernel.py for per-handler
-line citations).
 """
 
 from __future__ import annotations
 
-from .fastsax import (
-    ATTRIBUTE_NAME_END,
-    ATTRIBUTE_VALUE_END,
-    DOCTYPE_END,
-    DOCTYPE_VALUE_END,
-    ENTITY_CAPTURE_END,
-    GL,
-    PROC_INST_TARGET_END,
-    RE_ATTR_NAME_END,
-    RE_ATTR_VALUE_END,
-    RE_BRACES,
-    RE_CLOSE_END,
-    RE_DOCTYPE_END,
-    RE_DOCTYPE_VALUE_END,
-    RE_ENTITY_CAPTURE_END,
-    RE_NON_WS,
-    RE_PROC_TARGET_END,
-    RE_TAG_NAME_END,
-    RE_TEXT_END,
-    S_ATTRIB,
-    S_ATTRIB_NAME,
-    S_ATTRIB_NAME_WS,
-    S_ATTRIB_VAL,
-    S_ATTRIB_VAL_CLOSED,
-    S_ATTRIB_VAL_Q,
-    S_ATTRIB_VAL_UNQ,
-    S_BEGIN,
-    S_BEGIN_WS,
-    S_CDATA,
-    S_CLOSE_TAG,
-    S_COMMENT,
-    S_DOCTYPE,
-    S_DOCTYPE_ENTITY,
-    S_ENTITY,
-    S_JSX,
-    S_LT,
-    S_MARKUP_DECL,
-    S_OPEN_SLASH,
-    S_OPEN_TAG,
-    S_PROC_INST,
-    S_PROC_INST_VAL,
-    S_SKIP_WS,
-    S_TEXT,
-    TAG_NAME_END,
-    _gvs,
-    _last_gl,
-    _mat,
-    _name_mat,
-    _name_of,
-)
-from .names import is_name_start_char
+from .fastsax import fsm_rows, scan
 
 
-def _tuof_np(buf, n, regex, targets, cursor, include):
-    """take_until_one_found, positions dropped.
-
-    Returns (kind, cursor, lcp, last_byte, found) — same kinds and
-    byte results as fastsax._tuof."""
-    if cursor == n:
-        return (0, cursor, 0, -1, False)
-    idx = cursor - 1 if cursor else 0
-    if buf[idx] in targets:
-        return (1, cursor, 0, buf[idx], True)
-    start = cursor
-    m = regex.search(buf, start)
-    if m is not None:
-        pos = m.start()
-        if pos == start and not include:
-            return (0, cursor, 0, -1, False)
-        matched = buf[pos]
-        if include:
-            return (2, pos + 1, pos, matched, True)
-        ln = GL[matched]
-        lcp = pos - ln if pos >= ln else 0
-        return (2, pos, lcp, buf[pos - 1], True)
-    if start == n:
-        return (0, cursor, 0, -1, False)
-    ln = _last_gl(buf, n)
-    return (2, n, n - ln, buf[n - 1], False)
-
-
-def _tu_np(buf, n, target, cursor, include):
-    """take_until, positions dropped.
-
-    Returns (kind, cursor, lcp, last_byte, nonempty)."""
-    if cursor == n:
-        return (0, cursor, 0, -1, False)
-    start = cursor
-    pos = buf.find(target, start)
-    if pos >= 0:
-        if include:
-            return (2, pos + 1, pos, target, True)
-        ln = GL[buf[pos]]
-        lcp = pos - ln if pos >= ln else 0
-        return (2, pos, lcp, buf[pos - 1] if pos > start else -1, pos > start)
-    ln = _last_gl(buf, n) if n > start else 0
-    return (2, n, n - ln if n >= ln else 0, buf[n - 1] if n > start else -1, n > start)
-
-
-def _skipws_np(buf, n, cursor):
-    """skip_whitespace, positions dropped. Returns (cursor, lcp, done)."""
-    m = RE_NON_WS.search(buf, cursor)
-    pos = m.start() if m else n
-    return (pos, pos - 1 if pos else 0, pos < n)
-
-
-def parse_doc_np(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
+def parse_doc_np(data: bytes, events: int):
     """Flat event rows with zeroed positions, or None → use the FSM."""
-    buf = data
-    n = len(buf)
-    if not buf.isascii():
-        try:
-            buf.decode("utf-8")
-        except UnicodeDecodeError:
-            return None
-
-    ev_text = events & 1
-    ev_pi = events & 2
-    ev_decl = events & 4
-    ev_doctype = events & 8
-    ev_comment = events & 16
-    ev_ots = events & 32
-    ev_attr = events & 64
-    ev_ot = events & 128
-    ev_ct = events & 256
-    ev_cdata = events & 512
-    want_text = ev_text or ev_ct
-
-    rows: list[tuple] = []
-    append = rows.append
-    seq = 0
-
-    cursor = 0
-    lcp = 0
-    state = S_BEGIN
-    brace_ct = 0
-    quote = 0
-
-    # pending text (byte anchors only)
-    tx_on = False
-    tx_val = b""
-    tx_h0 = 0
-    tx_h1 = 0
-    tx_b0 = 0
-
-    # stack entries / current tag: [h0, h1, name|None, b0, b1]
-    # (the position slots of fastsax's 11-wide entry are dropped)
-    tags: list[list] = []
-    tg = [0, 0, None, 0, 0]
-
-    # attribute: [nh0, nh1, vh0, vh1, atype, b0]
-    at = [0, 0, 0, 0, 0, 0]
-
-    # close-tag capture
-    cl_h0 = 0
-    cl_h1 = 0
-
-    # markup decl
-    md_on = False
-    md_val = b""
-    md_h0 = 0
-    md_h1 = 0
-    md_b0 = 0
-    md_b1 = 0
-    me_on = False
-    me_h0 = 0
-    me_h1 = 0
-    me_b0 = 0
-
-    # proc inst
-    pi_b0 = 0
-    pi_th0 = pi_th1 = 0
-    pi_ch0 = pi_ch1 = 0
-
-    # BOM handled before the loop (fastsax pays a per-grapheme `first`
-    # check for it; hoisting it out is exactly equivalent because the
-    # BOM grapheme's own lcp is never observed — the next iteration
-    # overwrites it)
-    state = S_BEGIN_WS
-    if buf[:3] == b"\xef\xbb\xbf":
-        cursor = 3
-
-    while cursor < n:
-        b0 = buf[cursor]
-        if b0 < 0x80:
-            # ASCII fast path: no length table, no truncation guard
-            lcp = cursor
-            cursor += 1
-        else:
-            gend = cursor + GL[b0]
-            if gend > n:
-                return None  # cannot happen on valid UTF-8; defensive
-            lcp = cursor
-            cursor = gend
-
-        # inner redispatch loop (same shape as fastsax.parse_doc)
-        while True:
-            st = state
-
-            # ---------------- BEGIN_WS ----------------
-            if st == S_BEGIN_WS:
-                if b0 == 0x0A:
-                    state = S_SKIP_WS
-                    # fused SKIP_WS round-trip
-                    if cursor >= n:
-                        break
-                    g = buf[cursor]
-                    if g > 32:
-                        gl2 = GL[g] if g >= 0x80 else 1
-                        if cursor + gl2 > n:
-                            break
-                        lcp = cursor
-                        cursor += gl2
-                        if tx_on:
-                            tx_val = b""
-                            tx_h0 = cursor
-                        state = S_BEGIN_WS
-                        b0 = g
-                        continue
-                    m = RE_NON_WS.search(buf, cursor)
-                    if m is None:
-                        lcp = n - 1 if n else 0
-                        cursor = n
-                        break  # EOF inside whitespace: stay SKIP_WS
-                    cursor = m.start()
-                    lcp = cursor - 1 if cursor else 0
-                    if tx_on:
-                        tx_val = b""
-                        tx_h0 = cursor
-                    state = S_BEGIN_WS
-                    nb = buf[cursor]
-                    gl2 = GL[nb] if nb >= 0x80 else 1
-                    if cursor + gl2 > n:
-                        break
-                    lcp = cursor
-                    cursor += gl2
-                    b0 = nb
-                    continue
-                if b0 == 0x3C:
-                    tg = [0, 0, None, 0, 0]
-                    state = S_LT
-                    # fuse next(): consume the grapheme after '<'
-                    if cursor < n:
-                        b0 = buf[cursor]
-                        gl = GL[b0] if b0 >= 0x80 else 1
-                        if cursor + gl <= n:
-                            lcp = cursor
-                            cursor += gl
-                            continue
-                    break
-                if not tx_on and want_text:
-                    tx_on = True
-                    tx_val = b""
-                    tx_h0 = lcp
-                    tx_h1 = lcp
-                    tx_b0 = lcp
-                state = S_TEXT
-                break
-
-            # ---------------- LT ----------------
-            if st == S_LT:
-                fl_off = lcp - 1 if lcp >= 1 else 0
-                is_name = (
-                    (0x61 <= b0 <= 0x7A)
-                    or (0x41 <= b0 <= 0x5A)
-                    or b0 == 0x3A
-                    or b0 == 0x5F
-                    or (b0 > 0x7F and is_name_start_char(buf[lcp:cursor]))
-                )
-                if is_name:
-                    tg[0] = lcp
-                    tg[1] = cursor
-                    state = S_OPEN_TAG
-                    if tx_on:
-                        tx_on = False
-                        if ev_text and not (tx_h0 == fl_off and not tx_val):
-                            h0 = tx_h0
-                            ok = True
-                            if fl_off > h0:
-                                val = tx_val + buf[h0:fl_off]
-                            elif h0 > fl_off:
-                                val = tx_val
-                                ok = len(val) > 0
-                            elif h0 > 0:
-                                val = tx_val + buf[h0 : h0 + 1]
-                            else:
-                                val = tx_val
-                            if ok:
-                                append((0, seq, None, val, None, None, None, None,
-                                        None, None, 0, 0, 0, 0, None,
-                                        None, None, None, tx_b0, fl_off))
-                                seq += 1
-                    continue  # redispatch into OPEN_TAG
-                if b0 == 0x21:  # '!'
-                    state = S_MARKUP_DECL
-                    md_on = True
-                    md_b0 = cursor - 2 if cursor >= 2 else 0
-                    md_h0 = cursor - 1 if cursor >= 1 else 0
-                    md_h1 = cursor
-                    md_val = b"<"
-                    md_b1 = 0
-                    # fused comment / CDATA classification
-                    if tx_on:
-                        tx_on = False
-                        if ev_text and not (tx_h0 == fl_off and not tx_val):
-                            h0 = tx_h0
-                            ok = True
-                            if fl_off > h0:
-                                val = tx_val + buf[h0:fl_off]
-                            elif h0 > fl_off:
-                                val = tx_val
-                                ok = len(val) > 0
-                            elif h0 > 0:
-                                val = tx_val + buf[h0 : h0 + 1]
-                            else:
-                                val = tx_val
-                            if ok:
-                                append((0, seq, None, val, None, None, None, None,
-                                        None, None, 0, 0, 0, 0, None, None,
-                                        None, None, tx_b0, fl_off))
-                                seq += 1
-                    nxt2 = buf[cursor : cursor + 2]
-                    if nxt2 == b"--":
-                        cursor += 2
-                        md_val = b""
-                        md_h0 = cursor
-                        md_h1 = 0
-                        md_b1 = cursor - 4 if cursor >= 4 else 0
-                        state = S_COMMENT
-                        epos = buf.find(b"-->", cursor)
-                        if epos >= 0:
-                            body = buf[md_h0:epos]
-                            cursor = epos + 3
-                            lcp = cursor - 1
-                            if ev_comment:
-                                append((4, seq, None, body, None, None, None,
-                                        None, None, None, 0, 0, 0, 0,
-                                        None, None, None, None, md_b0, cursor))
-                                seq += 1
-                            md_on = False
-                            md_val = b""
-                            state = S_BEGIN_WS
-                    elif nxt2 == b"[C" or nxt2 == b"[c":
-                        if buf[cursor : cursor + 7].lower() == b"[cdata[":
-                            cursor += 7
-                            md_b1 = cursor - 9 if cursor >= 9 else 0
-                            md_val = b""
-                            md_h0 = cursor
-                            md_h1 = 0
-                            state = S_CDATA
-                            epos = buf.find(b"]]>", cursor)
-                            if epos >= 0:
-                                body = buf[md_h0:epos]
-                                cursor = epos + 3
-                                lcp = cursor - 1
-                                if ev_cdata:
-                                    append((9, seq, None, body, None, None, None,
-                                            None, None, None, 0, 0, 0, 0,
-                                            None, None, None, None, md_b0, cursor))
-                                    seq += 1
-                                md_on = False
-                                md_val = b""
-                                state = S_BEGIN_WS
-                elif b0 == 0x2F:  # '/'
-                    state = S_CLOSE_TAG
-                    cl_h0 = lcp
-                    cl_h1 = 0
-                    # fuse next(): chain straight into the close-tag
-                    # handler for the grapheme after '/'
-                    if tx_on:
-                        tx_on = False
-                        if ev_text and not (tx_h0 == fl_off and not tx_val):
-                            h0 = tx_h0
-                            ok = True
-                            if fl_off > h0:
-                                val = tx_val + buf[h0:fl_off]
-                            elif h0 > fl_off:
-                                val = tx_val
-                                ok = len(val) > 0
-                            elif h0 > 0:
-                                val = tx_val + buf[h0 : h0 + 1]
-                            else:
-                                val = tx_val
-                            if ok:
-                                append((0, seq, None, val, None, None, None, None,
-                                        None, None, 0, 0, 0, 0, None, None,
-                                        None, None, tx_b0, fl_off))
-                                seq += 1
-                    if cursor < n:
-                        b0 = buf[cursor]
-                        gl = GL[b0] if b0 >= 0x80 else 1
-                        if cursor + gl <= n:
-                            lcp = cursor
-                            cursor += gl
-                            continue
-                    break
-                elif b0 == 0x3F:  # '?'
-                    state = S_PROC_INST
-                    pi_th0 = lcp - 1 if lcp >= 1 else 0
-                    pi_th1 = cursor
-                    pi_b0 = cursor - 2 if cursor >= 2 else 0
-                    pi_ch0 = pi_ch1 = 0
-                elif b0 == 0x3E:  # '>' : JSX fragment
-                    if tx_on:
-                        tx_on = False
-                        if ev_text and not (tx_h0 == fl_off and not tx_val):
-                            h0 = tx_h0
-                            ok = True
-                            if fl_off > h0:
-                                val = tx_val + buf[h0:fl_off]
-                            elif h0 > fl_off:
-                                val = tx_val
-                                ok = len(val) > 0
-                            elif h0 > 0:
-                                val = tx_val + buf[h0 : h0 + 1]
-                            else:
-                                val = tx_val
-                            if ok:
-                                append((0, seq, None, val, None, None, None, None,
-                                        None, None, 0, 0, 0, 0, None,
-                                        None, None, None, tx_b0, fl_off))
-                                seq += 1
-                    # process_open_tag(False)
-                    tg[4] = cursor
-                    if ev_ot:
-                        nm = _name_mat(buf, tg)
-                        tg[2] = nm
-                        tg[0] = tg[1] = 0
-                        append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, 0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                        seq += 1
-                    tags.append(tg)
-                    tg = [0, 0, None, 0, 0]
-                    state = S_BEGIN_WS
-                    break
-                else:
-                    # '< foo' is text, not a tag
-                    if not tx_on and want_text:
-                        tx_on = True
-                        tx_val = b""
-                        tx_h0 = lcp
-                        tx_h1 = lcp
-                        tx_b0 = lcp
-                    state = S_TEXT
-                    break
-                # '!', '/', '?' arms flush pending text at the end
-                if tx_on:
-                    tx_on = False
-                    if not (tx_h0 == fl_off and not tx_val):
-                        val, ok = _mat(tx_val, buf, tx_h0, fl_off)
-                        if ev_text and ok:
-                            append((0, seq, None, val, None, None, None, None,
-                                    None, None, 0, 0, 0, 0, None, None,
-                                    None, None, tx_b0, fl_off))
-                            seq += 1
-                break
-
-            # ---------------- OPEN_TAG ----------------
-            if st == S_OPEN_TAG:
-                tg[3] = cursor - 2 if cursor >= 2 else 0
-                byte = b0
-                if byte not in TAG_NAME_END:
-                    m = RE_TAG_NAME_END.search(buf, cursor)
-                    if m is not None:
-                        pos = m.start()
-                        matched = buf[pos]
-                        lcp = pos
-                        cursor = pos + 1
-                        byte = matched
-                        tg[1] = lcp
-                    else:
-                        k, cursor2, lcp2, lastb, found = _tuof_np(
-                            buf, n, RE_TAG_NAME_END, TAG_NAME_END, cursor, True
-                        )
-                        if k == 2:
-                            cursor, lcp = cursor2, lcp2
-                            byte = lastb
-                            tg[1] = lcp if found else cursor
-                        else:
-                            tg[1] = lcp
-                if ev_ots:
-                    nm = _name_mat(buf, tg)
-                    tg[2] = nm
-                    tg[0] = tg[1] = 0
-                    append((5, seq, nm.decode("utf-8", "replace"), None, None,
-                            None, None, False, None, None, 0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                    seq += 1
-                if byte == 0x3E:
-                    tg[4] = cursor
-                    if ev_ot:
-                        nm = _name_mat(buf, tg)
-                        tg[2] = nm
-                        tg[0] = tg[1] = 0
-                        append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, 0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                        seq += 1
-                    tags.append(tg)
-                    tg = [0, 0, None, 0, 0]
-                    state = S_BEGIN_WS
-                elif byte == 0x2F:
-                    state = S_OPEN_SLASH
-                elif byte in (0x20, 0x09, 0x0A, 0x0D):
-                    state = S_ATTRIB
-                break
-
-            # ---------------- CLOSE_TAG ----------------
-            if st == S_CLOSE_TAG:
-                byte = b0
-                if byte != 0x3E:
-                    # _tuof_np(RE_CLOSE_END, "> ", include=True) inlined
-                    # (kind 1 precheck ⟺ byte==' ' since '>' is handled
-                    # above; kind 0 ⟺ the dispatched char was the last)
-                    start = lcp
-                    if byte == 0x20:
-                        cl_h0 = start
-                        cl_h1 = cursor - 1
-                    elif cursor == n:
-                        cl_h0 = start
-                        cl_h1 = cursor
-                    else:
-                        m = RE_CLOSE_END.search(buf, cursor)
-                        if m is not None:
-                            pos = m.start()
-                            byte = buf[pos]
-                            lcp = pos
-                            cursor = pos + 1
-                            cl_h0 = start
-                            cl_h1 = pos
-                        else:
-                            byte = buf[n - 1]
-                            lcp = n - _last_gl(buf, n)
-                            cursor = n
-                            cl_h0 = start
-                            cl_h1 = n
-                if byte == 0x3E:
-                    # ---- process_close_tag ----
-                    state = S_BEGIN_WS
-                    h0 = cl_h0
-                    h1 = cl_h1
-                    if h1 > h0:
-                        close_name = buf[h0:h1]
-                    elif h0 > h1 or h0 == 0:
-                        close_name = b""
-                    else:
-                        close_name = buf[h0 : h0 + 1]
-                    cl_h0 = cl_h1 = 0
-                    found_i = -1
-                    for i in range(len(tags) - 1, -1, -1):
-                        if _name_of(buf, tags[i]) == close_name:
-                            found_i = i
-                            break
-                    if found_i < 0:
-                        # orphan close → text
-                        if not tx_on:
-                            tx_on = True
-                            tx_b0 = 0
-                        tx_val = b"</" + close_name + b">"
-                        tx_h0 = 0
-                        tx_h1 = 0
-                        # flush_text(line, ch, 0)
-                        tx_on = False
-                        if tx_val:  # h0==h1==0 but value non-empty
-                            if ev_text:
-                                append((0, seq, None, tx_val, None, None, None,
-                                        None, None, None, 0, 0, 0, 0, None,
-                                        None, None, None, tx_b0, 0))
-                                seq += 1
-                        break
-                    e = tags[found_i]
-                    # byte_range.1 on the matched tag
-                    e[4] = cursor
-                    if not ev_ct:
-                        keep = found_i if found_i > 1 else 1
-                        del tags[keep:]
-                        break
-                    while len(tags) > found_i:
-                        e2 = tags.pop()
-                        nm = _name_mat(buf, e2)
-                        append((8, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, 0, 0, 0, 0,
-                                0, 0, 0, 0, e2[3], e2[4]))
-                        seq += 1
-                    break
-                if byte == 0x20:
-                    cursor, lcp, _d = _skipws_np(buf, n, cursor)
-                break
-
-            # ---------------- TEXT ----------------
-            if st == S_TEXT:
-                if b0 == 0x3C:
-                    state = S_LT
-                    break
-                # fused text-run loop (see fastsax.py for the derivation)
-                if b0 == 0x0A:
-                    fpos = lcp
-                    do_nl = True
-                else:
-                    do_nl = False
-                redisp = False
-                while True:
-                    if do_nl:
-                        do_nl = False
-                        # newline flushes text at byte fpos (_mat inlined;
-                        # skipped entirely when Text events are off — the
-                        # hydrate has no side effects)
-                        if tx_on:
-                            tx_on = False
-                            if ev_text and not (tx_h0 == fpos and not tx_val):
-                                h0 = tx_h0
-                                ok = True
-                                if fpos > h0:
-                                    val = tx_val + buf[h0:fpos]
-                                elif h0 > fpos:
-                                    val = tx_val
-                                    ok = len(val) > 0
-                                elif h0 > 0:
-                                    val = tx_val + buf[h0 : h0 + 1]
-                                else:
-                                    val = tx_val
-                                if ok:
-                                    append((0, seq, None, val, None, None, None, None,
-                                            None, None, 0, 0, 0, 0, None, None,
-                                            None, None, tx_b0, fpos))
-                                    seq += 1
-                        state = S_SKIP_WS
-                        if cursor >= n:
-                            break
-                        g = buf[cursor]
-                        if g <= 32:
-                            m = RE_NON_WS.search(buf, cursor)
-                            if m is None:
-                                lcp = n - 1 if n else 0
-                                cursor = n
-                                break  # EOF inside whitespace: stay SKIP_WS
-                            cursor = m.start()
-                            lcp = cursor - 1 if cursor else 0
-                            g = buf[cursor]
-                        gl2 = GL[g] if g >= 0x80 else 1
-                        if cursor + gl2 > n:
-                            break
-                        lcp = cursor
-                        cursor += gl2
-                        state = S_BEGIN_WS
-                        if g == 0x3C:
-                            b0 = g
-                            redisp = True  # BEGIN_WS '<' fusion
-                            break
-                        # BEGIN_WS text restart, inline
-                        if want_text:
-                            tx_on = True
-                            tx_val = b""
-                            tx_h0 = lcp
-                            tx_h1 = lcp
-                            tx_b0 = lcp
-                        state = S_TEXT
-                        # emulate the DISPATCH of the next grapheme (a
-                        # directly-dispatched '<' / EOF must NOT touch
-                        # tx_h1 — the one-byte hydrate quirk)
-                        if cursor >= n:
-                            break  # EOF right after restart: quirk flush
-                        y = buf[cursor]
-                        if y == 0x3C:
-                            lcp = cursor
-                            cursor += 1
-                            state = S_LT
-                            break  # direct-dispatch arm: no tx_h1 update
-                        gly = GL[y] if y >= 0x80 else 1
-                        if cursor + gly > n:
-                            break
-                        if y == 0x0A:
-                            lcp = cursor
-                            cursor += 1
-                            fpos = lcp
-                            do_nl = True
-                            continue
-                        lcp = cursor
-                        cursor += gly
-                        # fall through: bulk scan from after y
-                    # take_until_one_found(TEXT_END, False), inlined
-                    m = RE_TEXT_END.search(buf, cursor)
-                    if m is not None:
-                        pos = m.start()
-                        if buf[pos] == 0x3C:
-                            if pos != cursor:
-                                lcp = pos - 1
-                                cursor = pos
-                            if tx_on:
-                                tx_h1 = cursor
-                            # fuse the '<' step
-                            lcp = cursor
-                            cursor += 1
-                            state = S_LT
-                            break
-                        # '\n': consume it inline and loop
-                        fpos = pos
-                        lcp = pos
-                        cursor = pos + 1
-                        do_nl = True
-                        continue
-                    if cursor < n:
-                        lcp = n - _last_gl(buf, n)
-                        cursor = n
-                    if tx_on:
-                        tx_h1 = cursor
-                    break
-                if redisp:
-                    continue  # redispatch '<' into BEGIN_WS
-                break
-
-            # ---------------- ATTRIB ----------------
-            if st == S_ATTRIB:
-                if b0 < 33:
-                    # bulk-skip the whitespace run
-                    m = RE_NON_WS.search(buf, cursor)
-                    pos = m.start() if m else n
-                    if pos > cursor:
-                        lcp = pos - 1
-                        cursor = pos
-                    break
-                at[5] = cursor - 1 if cursor >= 1 else 0
-                if b0 == 0x3E:
-                    state = -1  # handled by shared open-tag emit below
-                elif b0 == 0x2F:
-                    state = S_OPEN_SLASH
-                    break
-                else:
-                    at[0] = lcp
-                    # ---- fused fast path: whole attribute lists ----
-                    redispatch = False
-                    while True:
-                        if b0 in ATTRIBUTE_NAME_END:
-                            state = S_ATTRIB_NAME
-                            redispatch = True
-                            break
-                        m = RE_ATTR_NAME_END.search(buf, cursor)
-                        if m is None or buf[m.start()] != 0x3D:
-                            state = S_ATTRIB_NAME
-                            redispatch = True
-                            break
-                        pos = m.start()
-                        if pos > cursor:
-                            cursor = pos
-                        at[1] = cursor
-                        # consume '='
-                        cursor += 1
-                        if cursor >= n:
-                            state = S_ATTRIB_VAL
-                            break
-                        q = buf[cursor]
-                        if q != 0x22 and q != 0x27:
-                            state = S_ATTRIB_VAL
-                            break
-                        # consume the opening quote
-                        cursor += 1
-                        at[2] = cursor
-                        at[4] = 8 if q == 0x22 else 4
-                        cpos = buf.find(q, cursor)
-                        if cpos < 0:
-                            quote = q
-                            state = S_ATTRIB_VAL_Q
-                            break
-                        # value span + closing quote
-                        lcp = cpos
-                        cursor = cpos + 1
-                        h1 = cursor - 1
-                        if h1 == at[2]:
-                            at[3] = h1 - 1 if h1 >= 1 else 0
-                        else:
-                            at[3] = h1
-                        # _mat(name) / _mat(value) inlined on the hot
-                        # attribute path; skipped when Attribute events
-                        # are off (the hydrate has no side effects)
-                        if ev_attr:
-                            h0 = at[0]
-                            h1 = at[1]
-                            if h1 > h0:
-                                nval = buf[h0:h1]
-                                nok = True
-                            elif h0 > h1:
-                                nval = b""
-                                nok = False
-                            elif h0 > 0:
-                                nval = buf[h0 : h0 + 1]
-                                nok = True
-                            else:
-                                nval = b""
-                                nok = True
-                            h0 = at[2]
-                            h1 = at[3]
-                            if h1 > h0:
-                                vval = buf[h0:h1]
-                                vok = True
-                            elif h0 > h1:
-                                vval = b""
-                                vok = False
-                            elif h0 > 0:
-                                vval = buf[h0 : h0 + 1]
-                                vok = True
-                            else:
-                                vval = b""
-                                vok = True
-                            if nok or vok:
-                                append((6, seq, None, None, nval,
-                                        vval, at[4], None, None, None,
-                                        0, 0, 0, 0, 0, 0, 0, 0,
-                                        at[5], cursor))
-                                seq += 1
-                        at = [0, 0, 0, 0, 0, 0]
-                        quote = 0
-                        state = S_ATTRIB_VAL_CLOSED
-                        # ---- separator peek (VAL_CLOSED arms inline) ----
-                        if cursor >= n:
-                            break
-                        sep = buf[cursor]
-                        if sep == 0x3E:  # '>' closes the tag
-                            lcp = cursor
-                            cursor += 1
-                            tg[4] = cursor
-                            if ev_ot:
-                                nm = _name_mat(buf, tg)
-                                tg[2] = nm
-                                tg[0] = tg[1] = 0
-                                append((7, seq, nm.decode("utf-8", "replace"),
-                                        None, None, None, None, False, None, None,
-                                        0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                                seq += 1
-                            tags.append(tg)
-                            tg = [0, 0, None, 0, 0]
-                            state = S_BEGIN_WS
-                            break
-                        if sep < 33:
-                            # one ws grapheme: VAL_CLOSED -> ATTRIB
-                            lcp = cursor
-                            cursor += 1
-                            state = S_ATTRIB
-                            # ATTRIB ws arm: bulk-skip remaining ws
-                            if cursor < n and buf[cursor] <= 32:
-                                m2 = RE_NON_WS.search(buf, cursor)
-                                pos2 = m2.start() if m2 else n
-                                lcp = pos2 - 1
-                                cursor = pos2
-                            if cursor >= n:
-                                break
-                            nb = buf[cursor]
-                            gl2 = GL[nb] if nb >= 0x80 else 1
-                            if cursor + gl2 > n:
-                                break
-                            # consume the next grapheme (ATTRIB dispatch)
-                            lcp = cursor
-                            cursor += gl2
-                            at[5] = cursor - 1 if cursor >= 1 else 0
-                            if nb == 0x3E:
-                                tg[4] = cursor
-                                if ev_ot:
-                                    nm = _name_mat(buf, tg)
-                                    tg[2] = nm
-                                    tg[0] = tg[1] = 0
-                                    append((7, seq, nm.decode("utf-8", "replace"),
-                                            None, None, None, None, False, None, None,
-                                            0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                                    seq += 1
-                                tags.append(tg)
-                                tg = [0, 0, None, 0, 0]
-                                state = S_BEGIN_WS
-                                break
-                            if nb == 0x2F:
-                                state = S_OPEN_SLASH
-                                break
-                            at[0] = lcp
-                            b0 = nb
-                            state = S_ATTRIB_NAME
-                            continue  # next attribute
-                        if sep == 0x2F:
-                            lcp = cursor
-                            cursor += 1
-                            state = S_OPEN_SLASH
-                            break
-                        # no-space next attribute (VAL_CLOSED else arm)
-                        gl2 = GL[sep] if sep >= 0x80 else 1
-                        if cursor + gl2 > n:
-                            break
-                        lcp = cursor
-                        cursor += gl2
-                        at[0] = lcp
-                        at[5] = lcp
-                        b0 = sep
-                        state = S_ATTRIB_NAME
-                        continue  # next attribute
-                    if redispatch:
-                        continue  # redispatch current grapheme
-                    break  # fused loop fully handled this span
-                # process_open_tag(False) — '>' in attrib position
-                tg[4] = cursor
-                if ev_ot:
-                    nm = _name_mat(buf, tg)
-                    tg[2] = nm
-                    tg[0] = tg[1] = 0
-                    append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                            None, None, False, None, None, 0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                    seq += 1
-                tags.append(tg)
-                tg = [0, 0, None, 0, 0]
-                state = S_BEGIN_WS
-                break
-
-            # ---------------- ATTRIB_NAME ----------------
-            if st == S_ATTRIB_NAME:
-                if b0 == 0x3D:  # '='
-                    state = S_ATTRIB_VAL
-                    break
-                if b0 == 0x3E:
-                    # process_attribute then process_open_tag
-                    nval, nok = _mat(b"", buf, at[0], at[1])
-                    vval, vok = _mat(b"", buf, at[2], at[3])
-                    if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[4], None,
-                                None, None, 0, 0, 0, 0, 0, 0,
-                                0, 0, at[5], cursor))
-                        seq += 1
-                    at = [0, 0, 0, 0, 0, 0]
-                    tg[4] = cursor
-                    if ev_ot:
-                        nm = _name_mat(buf, tg)
-                        tg[2] = nm
-                        tg[0] = tg[1] = 0
-                        append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, 0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                        seq += 1
-                    tags.append(tg)
-                    tg = [0, 0, None, 0, 0]
-                    state = S_BEGIN_WS
-                    break
-                if b0 < 33:
-                    at[1] = lcp
-                    state = S_ATTRIB_NAME_WS
-                    continue  # redispatch
-                k, cursor2, lcp2, lastb, found = _tuof_np(
-                    buf, n, RE_ATTR_NAME_END, ATTRIBUTE_NAME_END, cursor, False
-                )
-                if k == 2:
-                    cursor, lcp = cursor2, lcp2
-                at[1] = cursor
-                break
-
-            # ---------------- ATTRIB_NAME_WS ----------------
-            if st == S_ATTRIB_NAME_WS:
-                if b0 < 33:
-                    cursor, lcp, _d = _skipws_np(buf, n, cursor)
-                    break
-                if b0 != 0x3D:
-                    # process_attribute (bare attribute)
-                    nval, nok = _mat(b"", buf, at[0], at[1])
-                    vval, vok = _mat(b"", buf, at[2], at[3])
-                    if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[4], None,
-                                None, None, 0, 0, 0, 0, 0, 0,
-                                0, 0, at[5], cursor))
-                        seq += 1
-                    at = [0, 0, 0, 0, 0, 0]
-                if b0 == 0x3D:
-                    state = S_ATTRIB_VAL
-                    break
-                if b0 == 0x2F:
-                    state = S_OPEN_SLASH
-                    break
-                if b0 == 0x3E:
-                    tg[4] = cursor
-                    if ev_ot:
-                        nm = _name_mat(buf, tg)
-                        tg[2] = nm
-                        tg[0] = tg[1] = 0
-                        append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, 0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                        seq += 1
-                    tags.append(tg)
-                    tg = [0, 0, None, 0, 0]
-                    state = S_BEGIN_WS
-                    break
-                at[0] = lcp
-                state = S_ATTRIB_NAME
-                continue  # redispatch
-
-            # ---------------- ATTRIB_VAL ----------------
-            if st == S_ATTRIB_VAL:
-                if b0 < 33:
-                    m = RE_NON_WS.search(buf, cursor)
-                    pos = m.start() if m else n
-                    if pos > cursor:
-                        lcp = pos - 1
-                        cursor = pos
-                    break
-                at[2] = cursor
-                if b0 == 0x22 or b0 == 0x27:
-                    quote = b0
-                    state = S_ATTRIB_VAL_Q
-                    at[4] = 8 if b0 == 0x22 else 4
-                elif b0 == 0x7B:  # '{'
-                    state = S_JSX
-                    at[4] = 1
-                    brace_ct += 1
-                else:
-                    at[2] = lcp
-                    state = S_ATTRIB_VAL_UNQ
-                    at[4] = 2
-                    continue  # redispatch
-                break
-
-            # ---------------- ATTRIB_VAL_Q ----------------
-            if st == S_ATTRIB_VAL_Q:
-                if b0 == quote:
-                    h1 = cursor - 1 if cursor >= 1 else 0
-                    if h1 == at[2]:
-                        at[3] = h1 - 1 if h1 >= 1 else 0
-                    else:
-                        at[3] = h1
-                    # process_attribute
-                    nval, nok = _mat(b"", buf, at[0], at[1])
-                    vval, vok = _mat(b"", buf, at[2], at[3])
-                    if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[4], None,
-                                None, None, 0, 0, 0, 0, 0, 0,
-                                0, 0, at[5], cursor))
-                        seq += 1
-                    at = [0, 0, 0, 0, 0, 0]
-                    quote = 0
-                    state = S_ATTRIB_VAL_CLOSED
-                    break
-                k, cursor2, lcp2, lastb, ne = _tu_np(buf, n, quote, cursor, False)
-                if k == 2:
-                    cursor, lcp = cursor2, lcp2
-                at[3] = cursor
-                break
-
-            # ---------------- ATTRIB_VAL_CLOSED ----------------
-            if st == S_ATTRIB_VAL_CLOSED:
-                if b0 < 33:
-                    state = S_ATTRIB
-                    break
-                if b0 == 0x3E:
-                    tg[4] = cursor
-                    if ev_ot:
-                        nm = _name_mat(buf, tg)
-                        tg[2] = nm
-                        tg[0] = tg[1] = 0
-                        append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, 0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                        seq += 1
-                    tags.append(tg)
-                    tg = [0, 0, None, 0, 0]
-                    state = S_BEGIN_WS
-                    break
-                if b0 == 0x2F:
-                    state = S_OPEN_SLASH
-                    break
-                at[0] = lcp
-                at[5] = lcp
-                state = S_ATTRIB_NAME
-                continue  # redispatch
-
-            # ---------------- ATTRIB_VAL_UNQ ----------------
-            if st == S_ATTRIB_VAL_UNQ:
-                if b0 < 33:
-                    cursor, lcp, _d = _skipws_np(buf, n, cursor)
-                    break
-                byte = b0
-                if byte not in ATTRIBUTE_NAME_END:
-                    attr_end = False
-                    k, cursor2, lcp2, lastb, found = _tuof_np(
-                        buf, n, RE_ATTR_VALUE_END, ATTRIBUTE_VALUE_END, cursor, False
-                    )
-                    if k != 0:
-                        byte = lastb
-                        attr_end = found
-                        if k == 2:
-                            cursor, lcp = cursor2, lcp2
-                    at[3] = cursor
-                    if not attr_end and b0 != byte:
-                        break
-                # process_attribute
-                nval, nok = _mat(b"", buf, at[0], at[1])
-                vval, vok = _mat(b"", buf, at[2], at[3])
-                if ev_attr and (nok or vok):
-                    append((6, seq, None, None, nval, vval, at[4], None,
-                            None, None, 0, 0, 0, 0, 0, 0,
-                            0, 0, at[5], cursor))
-                    seq += 1
-                at = [0, 0, 0, 0, 0, 0]
-                if byte == 0x2F:
-                    state = S_OPEN_SLASH
-                elif byte == 0x3E:
-                    tg[4] = cursor
-                    if ev_ot:
-                        nm = _name_mat(buf, tg)
-                        tg[2] = nm
-                        tg[0] = tg[1] = 0
-                        append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, False, None, None, 0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                        seq += 1
-                    tags.append(tg)
-                    tg = [0, 0, None, 0, 0]
-                    state = S_BEGIN_WS
-                else:
-                    state = S_ATTRIB
-                break
-
-            # ---------------- OPEN_SLASH ----------------
-            if st == S_OPEN_SLASH:
-                if b0 == 0x3E:
-                    # process_open_tag(True): self-closing
-                    tg[4] = cursor
-                    nm = None
-                    if ev_ot:
-                        nm = _name_mat(buf, tg)
-                        tg[2] = nm
-                        tg[0] = tg[1] = 0
-                        append((7, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, True, None, None, 0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                        seq += 1
-                    if ev_ct:
-                        if nm is None:
-                            nm = _name_mat(buf, tg)
-                            tg[2] = nm
-                            tg[0] = tg[1] = 0
-                        append((8, seq, nm.decode("utf-8", "replace"), None, None,
-                                None, None, True, None, None, 0, 0, 0, 0, 0, 0, 0, 0, tg[3], tg[4]))
-                        seq += 1
-                    tg = [0, 0, None, 0, 0]
-                    state = S_BEGIN_WS
-                    break
-                state = S_ATTRIB
-                break
-
-            # ---------------- SKIP_WS ----------------
-            if st == S_SKIP_WS:
-                if b0 > 32:
-                    done = True
-                else:
-                    cursor, lcp, done = _skipws_np(buf, n, cursor)
-                if done:
-                    if tx_on:
-                        tx_val = b""
-                        tx_h0 = cursor
-                    state = S_BEGIN_WS
-                    if b0 > 32:
-                        continue  # redispatch current grapheme
-                    nb = buf[cursor]
-                    gl2 = GL[nb] if nb >= 0x80 else 1
-                    if cursor + gl2 > n:
-                        break
-                    lcp = cursor
-                    cursor += gl2
-                    b0 = nb
-                    continue
-                break
-
-            # ---------------- MARKUP_DECL ----------------
-            if st == S_MARKUP_DECL:
-                if b0 not in ENTITY_CAPTURE_END:
-                    k, cursor2, lcp2, lastb, found = _tuof_np(
-                        buf, n, RE_ENTITY_CAPTURE_END, ENTITY_CAPTURE_END, cursor, False
-                    )
-                    if k == 2:
-                        cursor, lcp = cursor2, lcp2
-                md_h1 = cursor
-                md_b1 = cursor
-                md_val, md_h0, md_h1 = _gvs(md_val, buf, n, md_h0, md_h1)
-                sl_len = len(md_val)
-                if sl_len >= 4 and md_val[:4] == b"<!--":
-                    md_val = b""
-                    md_h0 = cursor
-                    md_h1 = 0
-                    md_b1 = cursor - 4 if cursor >= 4 else 0
-                    state = S_COMMENT
-                    break
-                if sl_len >= 9 and md_val[:9].lower() == b"<![cdata[":
-                    md_b1 = cursor - 9 if cursor >= 9 else 0
-                    md_val = b""
-                    md_h0 = cursor
-                    md_h1 = 0
-                    state = S_CDATA
-                    break
-                if sl_len >= 9 and md_val[:9].lower() == b"<!doctype":
-                    md_b1 = cursor - 9 if cursor >= 9 else 0
-                    cursor, lcp, _d = _skipws_np(buf, n, cursor)
-                    md_val = b""
-                    md_h0 = cursor
-                    md_h1 = 0
-                    state = S_DOCTYPE
-                    break
-                btc = md_val[:3] if sl_len > 2 else md_val
-                if btc != b"<!-" and btc != b"<![" and not (
-                    len(btc) == 3 and btc.lower() == b"<!d"
-                ):
-                    me_on = True
-                    me_b0 = 0
-                    cursor, lcp, _d = _skipws_np(buf, n, cursor)
-                    me_h0 = cursor
-                    me_h1 = 0
-                    state = S_ENTITY
-                    md_on = False
-                else:
-                    md_h0 = cursor
-                    md_h1 = 0
-                break
-
-            # ---------------- COMMENT ----------------
-            if st == S_COMMENT:
-                if b0 != 0x3E:
-                    k, cursor2, lcp2, lastb, ne = _tu_np(buf, n, 0x3E, cursor, True)
-                    if k == 2:
-                        cursor, lcp = cursor2, lcp2
-                md_h1 = cursor
-                md_b1 = cursor
-                md_val, md_h0, md_h1 = _gvs(md_val, buf, n, md_h0, md_h1)
-                if len(md_val) > 2 and md_val[-3:] == b"-->":
-                    if ev_comment:
-                        append((4, seq, None, md_val[:-3], None, None, None, None,
-                                None, None, 0, 0, 0, 0, None, None, None,
-                                None, md_b0, md_b1))
-                        seq += 1
-                    md_on = False
-                    md_val = b""
-                    state = S_BEGIN_WS
-                else:
-                    md_h0 = cursor
-                    md_h1 = 0
-                break
-
-            # ---------------- CDATA ----------------
-            if st == S_CDATA:
-                if b0 != 0x3E:
-                    k, cursor2, lcp2, lastb, ne = _tu_np(buf, n, 0x3E, cursor, True)
-                    if k == 2:
-                        cursor, lcp = cursor2, lcp2
-                md_h1 = cursor
-                md_b1 = cursor
-                md_val, md_h0, md_h1 = _gvs(md_val, buf, n, md_h0, md_h1)
-                if len(md_val) > 2 and md_val[-3:] == b"]]>":
-                    if ev_cdata:
-                        append((9, seq, None, md_val[:-3], None, None, None, None,
-                                None, None, 0, 0, 0, 0, None, None, None,
-                                None, md_b0, md_b1))
-                        seq += 1
-                    state = S_BEGIN_WS
-                    md_val = b""
-                    md_on = False
-                else:
-                    md_h0 = cursor
-                    md_h1 = 0
-                break
-
-            # ---------------- DOCTYPE / DOCTYPE_ENTITY ----------------
-            if st == S_DOCTYPE or st == S_DOCTYPE_ENTITY:
-                byte = b0
-                if st != S_DOCTYPE_ENTITY and byte not in DOCTYPE_VALUE_END:
-                    k, cursor2, lcp2, lastb, found = _tuof_np(
-                        buf, n, RE_DOCTYPE_VALUE_END, DOCTYPE_VALUE_END, cursor, True
-                    )
-                    if k != 0:
-                        byte = lastb
-                        if k == 2:
-                            cursor, lcp = cursor2, lcp2
-                    md_h1 = cursor
-                    md_b1 = cursor
-                if byte not in DOCTYPE_END:
-                    k, cursor2, lcp2, lastb, found = _tuof_np(
-                        buf, n, RE_DOCTYPE_END, DOCTYPE_END, cursor, True
-                    )
-                    if k != 0:
-                        byte = lastb
-                        if k == 2:
-                            cursor, lcp = cursor2, lcp2
-                if byte == 0x21:  # '!'
-                    state = S_ENTITY
-                    me_on = True
-                    me_h0 = cursor
-                    me_h1 = 0
-                    me_b0 = cursor
-                    break
-                if byte == 0x3E:
-                    val, ok = _mat(md_val, buf, md_h0, md_h1)
-                    md_val = b""
-                    md_on = False
-                    if ev_doctype and ok:
-                        append((3, seq, None, val[:-1] if val else val, None,
-                                None, None, None, None, None, 0, 0, 0, 0,
-                                None, None, None, None, md_b0, md_b1))
-                        seq += 1
-                    state = S_BEGIN_WS
-                break
-
-            # ---------------- ENTITY ----------------
-            if st == S_ENTITY:
-                byte = b0
-                if byte != 0x3E:
-                    k, cursor2, lcp2, lastb, ne = _tu_np(buf, n, 0x3E, cursor, True)
-                    if k == 2:
-                        cursor, lcp = cursor2, lcp2
-                        if ne:
-                            byte = lastb
-                if byte == 0x3E:
-                    me_h1 = cursor - 1 if cursor >= 1 else 0
-                    me_b1 = cursor - 1 if cursor >= 1 else 0
-                    me_on = False
-                    if ev_decl:
-                        val, ok = _mat(b"", buf, me_h0, me_h1)
-                        if ok:
-                            # reference dispatches declarations with the
-                            # Cdata event code (parser.rs:822-823)
-                            append((9, seq, None, val, None, None, None, None,
-                                    None, None, 0, 0, 0, 0, None, None,
-                                    None, None, me_b0, me_b1))
-                            seq += 1
-                    state = S_DOCTYPE_ENTITY if md_on else S_BEGIN_WS
-                    cursor, lcp, _d = _skipws_np(buf, n, cursor)
-                break
-
-            # ---------------- PROC_INST ----------------
-            if st == S_PROC_INST:
-                byte = b0
-                if byte not in PROC_INST_TARGET_END:
-                    k, cursor2, lcp2, lastb, found = _tuof_np(
-                        buf, n, RE_PROC_TARGET_END, PROC_INST_TARGET_END, cursor, True
-                    )
-                    if k != 0:
-                        byte = lastb
-                        if k == 2:
-                            cursor, lcp = cursor2, lcp2
-                pi_th1 = cursor
-                if byte == 0x3E:
-                    # process_proc_inst
-                    state = S_BEGIN_WS
-                    if ev_pi:
-                        tval, _tok = _mat(b"", buf, pi_th0, pi_th1)
-                        cval, _cok = _mat(b"", buf, pi_ch0, pi_ch1)
-                        tval = tval[2:]
-                        cval = cval[: len(cval) - 2] if len(cval) >= 2 else b""
-                        append((1, seq, None, None, None, None, None, None,
-                                tval, cval, 0, 0, 0, 0, 0, 0,
-                                0, 0, pi_b0, cursor))
-                        seq += 1
-                elif byte < 33:
-                    pi_th1 = cursor - 1 if cursor >= 1 else 0
-                    cursor, lcp, _d = _skipws_np(buf, n, cursor)
-                    pi_ch0 = cursor
-                    pi_ch1 = 0
-                    state = S_PROC_INST_VAL
-                break
-
-            # ---------------- PROC_INST_VAL ----------------
-            if st == S_PROC_INST_VAL:
-                byte = b0
-                if byte != 0x3E:
-                    k, cursor2, lcp2, lastb, ne = _tu_np(buf, n, 0x3E, cursor, True)
-                    if k == 2:
-                        cursor, lcp = cursor2, lcp2
-                        if ne:
-                            byte = lastb
-                pi_ch1 = cursor
-                if byte != 0x3E:
-                    break
-                state = S_BEGIN_WS
-                if ev_pi:
-                    tval, _tok = _mat(b"", buf, pi_th0, pi_th1)
-                    cval, _cok = _mat(b"", buf, pi_ch0, pi_ch1)
-                    tval = tval[2:]
-                    cval = cval[: len(cval) - 2] if len(cval) >= 2 else b""
-                    append((1, seq, None, None, None, None, None, None,
-                            tval, cval, 0, 0, 0, 0, 0, 0,
-                            0, 0, pi_b0, cursor))
-                    seq += 1
-                break
-
-            # ---------------- JSX ----------------
-            if st == S_JSX:
-                if b0 == 0x7D:
-                    brace_ct -= 1
-                elif b0 == 0x7B:
-                    brace_ct += 1
-                if brace_ct == 0:
-                    at[3] = lcp
-                    nval, nok = _mat(b"", buf, at[0], at[1])
-                    vval, vok = _mat(b"", buf, at[2], at[3])
-                    if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[4], None,
-                                None, None, 0, 0, 0, 0, 0, 0,
-                                0, 0, at[5], cursor))
-                        seq += 1
-                    at = [0, 0, 0, 0, 0, 0]
-                    state = S_ATTRIB_VAL_CLOSED
-                    break
-                k, cursor2, lcp2, lastb, found = _tuof_np(
-                    buf, n, RE_BRACES, b"{}", cursor, False
-                )
-                if k == 2:
-                    cursor, lcp = cursor2, lcp2
-                break
-
-            # ---------------- BEGIN (only if BOM handling fell through) --
-            if st == S_BEGIN:
-                state = S_BEGIN_WS
-                continue
-
-            break  # unknown state guard
-
-    # EOF: identity() flush — chunk_offset is now len(data)
-    if tx_on:
-        val, _ok = _mat(tx_val, buf, tx_h0, tx_h1)
-        if val:
-            if ev_text:
-                rows.append((0, seq, None, val, None, None, None, None, None,
-                             None, 0, 0, 0, 0, None, None, None, None,
-                             tx_b0, n))
-                seq += 1
-    return rows
+    return scan(data, events, 0)
 
 
 def parse_doc_flat_np(data: bytes, events: int) -> list[tuple]:
     """Positions-off fast path with automatic FSM fallback (the FSM
     rows carry real positions — a superset; consumers of this entry
     point must not rely on position fields either way)."""
-    rows = parse_doc_np(data, events)
+    rows = scan(data, events, 0)
     if rows is not None:
         return rows
-    from .fastsax import parse_doc_flat  # noqa: PLC0415
-
-    return parse_doc_flat(data, events)
+    return fsm_rows(data, events)

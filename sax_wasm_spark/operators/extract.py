@@ -225,11 +225,9 @@ def extract_bytes(html: bytes):
     The title is the first text node under a <title> element (captured
     before the head-drop rule — titles are metadata, not boilerplate).
 
-    Runs the POSITIONS-OFF kernel (fastsax_np): the reduction reads
-    only codes/names/values/self_closing/byte-offsets, so line/char
-    tracking is pure overhead here (~1.5x parse throughput; the
-    positions-on twin stays differential-gated and serves every
-    position-surfacing query)."""
+    Runs the fast kernel with positions off (fastsax_np): the reduction
+    reads only codes/names/values/self_closing/byte-offsets, so the
+    line/char position pass never runs here."""
     try:
         rows = parse_doc_flat_np(html, EXTRACT_MASK)
         text, spans, title = _extract_rows(rows)

@@ -32,7 +32,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel.collect import ALL_EVENTS, EventCollector
-from ..kernel.fastsax import parse_doc_flat
+from ..kernel.fastsax import TEXT_LIKE, fsm_rows, parse_doc_flat, resolve_positions, scan
 from ..kernel.fastsax_np import parse_doc_flat_np
 from ..kernel.saxkernel import SaxParser
 
@@ -80,13 +80,17 @@ def tokenize_events(
     fixed-size writes (event values are identical; used for streaming-
     parity tests). The id columns are repeated per event row.
 
-    ``positions=False`` runs the positions-off kernel (fastsax_np):
-    line/char columns come back 0, byte offsets stay exact, the parse
-    is ~1.5x faster — the Python-stage analogue of column pruning.
-    Pass it whenever downstream never reads the position columns
-    (the extractor and the event-histogram/text/attribute queries);
-    the position surface itself is oracle-checked by sax_positions,
-    which keeps the default.
+    Line/char positions are derived once per Arrow batch: the kernel
+    emits byte anchors and ``fastsax.resolve_positions`` maps the whole
+    batch's anchor columns in one vectorized pass (FSM fallback rows
+    already carry positions and pass through). ``positions=False``
+    skips that pass and writes 0 into every line/char column (null
+    where a row has no open_end/close_start), for every row including
+    FSM fallbacks; byte offsets stay exact — the Python-stage analogue
+    of column pruning. Pass it whenever downstream never reads the
+    position columns (the extractor and the event-histogram/text/
+    attribute queries); the position surface itself is oracle-checked
+    by sax_positions, which keeps the default.
 
     Output batches are built as pyarrow RecordBatches directly
     (``mapInArrow``): the kernel's row tuples are transposed once and
@@ -94,6 +98,7 @@ def tokenize_events(
     pandas-DataFrame intermediate and its object-dtype inference +
     pandas→Arrow reconversion on every batch.
     """
+    import numpy as np  # noqa: PLC0415
     import pyarrow as pa  # noqa: PLC0415
 
     from pyspark.sql.pandas.types import to_arrow_type  # noqa: PLC0415
@@ -114,11 +119,14 @@ def tokenize_events(
             ids = [rb.column(j).to_pylist() for j in range(n_id)]
             out_ids: list[list] = [[] for _ in range(n_id)]
             out_rows: list[tuple] = []
+            docs: list[bytes] = []  # documents whose rows carry anchors
+            row_doc: list[int] = []  # per row: index in docs, -1 = positions
             for i, data in enumerate(htmls):
                 if data is None:
                     continue
                 if isinstance(data, (bytearray, memoryview)):
                     data = bytes(data)
+                doc = -1
                 if chunk_size and chunk_size < len(data):
                     # streaming-parity mode: feed the FSM in fixed chunks
                     collector.reset()
@@ -129,23 +137,44 @@ def tokenize_events(
                     rows = collector.rows
                 elif positions:
                     # hot path: single-shot kernel w/ automatic FSM fallback
-                    rows = parse_doc_flat(data, events)
+                    rows = scan(data, events, 1)
+                    if rows is None:
+                        rows = fsm_rows(data, events)
+                    else:
+                        doc = len(docs)
+                        docs.append(data)
                 else:
                     rows = parse_doc_flat_np(data, events)
                 if rows:
                     for j in range(n_id):
                         out_ids[j].extend([ids[j][i]] * len(rows))
                     out_rows.extend(rows)
+                    if positions:
+                        row_doc.extend([doc] * len(rows))
+            n = len(out_rows)
             if out_rows:
                 cols = list(zip(*out_rows))
             else:
                 cols = [[] for _ in _COLS]
-            arrays = [
-                pa.array(out_ids[j], type=arrow_fields[j].type) for j in range(n_id)
-            ] + [
-                pa.array(cols[k], type=arrow_fields[n_id + k].type)
-                for k in range(len(_COLS))
-            ]
+            no_open_end = TEXT_LIKE[np.fromiter(cols[0], np.int64, n)]
+            # (line or char, position, row): the 8 line/char columns
+            pos = np.zeros((2, 4, n), np.int64)
+            if positions:
+                for k in range(10, 18):
+                    pos[k % 2, (k - 10) // 2] = (
+                        pa.array(cols[k], pa.int64()).fill_null(0).to_numpy()
+                    )
+                if docs:
+                    resolve_positions(docs, pos, np.array(row_doc, np.int64))
+            arrays = (
+                [pa.array(out_ids[j], type=arrow_fields[j].type) for j in range(n_id)]
+                + [pa.array(cols[k], type=arrow_fields[n_id + k].type) for k in range(10)]
+                + [
+                    pa.array(pos[k % 2, (k - 10) // 2], mask=no_open_end if k >= 14 else None)
+                    for k in range(10, 18)
+                ]
+                + [pa.array(cols[k], type=arrow_fields[n_id + k].type) for k in (18, 19)]
+            )
             yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     return src.mapInArrow(run, schema=out_schema)

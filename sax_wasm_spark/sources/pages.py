@@ -131,6 +131,34 @@ def build_page(doc_id: int, scale: int = 1) -> tuple[str, datetime.datetime, byt
     return url, ts, html, body_text, lang
 
 
+_LARGE_WORDS = (
+    "naïve", "café", "日本語", "🚀 launch", "plain", "Ωmega", "x < y", "a&amp;b",
+)
+
+
+def build_large_xml(items: int = 12000) -> bytes:
+    """A deterministic multi-MB XML document (2.2 MB, 93k lines by default):
+    thousands of lines, non-ASCII text and names, attributes spread over
+    lines, comments, CDATA and processing instructions — a kernel
+    differential input that stresses line/column positions."""
+    out = ['<?xml version="1.0" encoding="utf-8"?>\n<!DOCTYPE corpus>\n<corpus>\n']
+    for i in range(items):
+        w = _LARGE_WORDS[i % len(_LARGE_WORDS)]
+        v = _LARGE_WORDS[(i // 3) % len(_LARGE_WORDS)]
+        out.append(
+            f'<item id="i{i}" class=c{i % 7}\n\ttitle="{w} {i}" 🏷="{i % 13}" lang=é{i % 5}>\n'
+            f"  <name>{w} item {i}</name>\n"
+            f"  <text>{v}\n    {w} 🚀 line two of {i}\n  </text>\n"
+        )
+        if i % 5 == 0:
+            out.append(f"  <!-- note {i}: {w} -->\n  <![CDATA[raw {v}\n{i}]]>\n")
+        if i % 11 == 0:
+            out.append(f"  <?pi {w} {i}?>\n  <é{i % 3} a=🚀/>\n")
+        out.append("</item>\n")
+    out.append("</corpus>\n")
+    return "".join(out).encode()
+
+
 def synthesize_pages(
     spark: SparkSession,
     n_pages: int,

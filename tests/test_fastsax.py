@@ -13,7 +13,20 @@ sys.path.insert(0, "/root/repo/tools")
 from sax_wasm_spark.kernel.collect import EventCollector
 from sax_wasm_spark.kernel.fastsax import parse_doc, parse_doc_flat
 from sax_wasm_spark.kernel.saxkernel import SaxParser
-from sax_wasm_spark.sources.pages import build_page
+from sax_wasm_spark.sources.pages import build_large_xml, build_page
+
+# one input per position rule of the kernel's anchor pass: a step back
+# over a 4-byte character (value start, name start), byte columns zeroed
+# by the hydrate quirk on a row whose positions hold, an unclosed tag, and
+# positions across lines
+QUIRK_DOCS = [
+    "<a b=🚀>".encode(),
+    "<a 🚀=1>".encode(),
+    '<a b="x"🚀 c=1>'.encode(),
+    '<a b=""🚀>'.encode(),
+    b"<e a=1",
+    '<e\n a="é🚀"\n b=1>x\n</e>'.encode(),
+]
 
 
 def fsm_rows(d: bytes, m: int):
@@ -27,7 +40,7 @@ def fsm_rows(d: bytes, m: int):
 def test_fixture_corpus_equivalence():
     from diff_ref import DOCS, MASKS  # noqa: PLC0415
 
-    for d in DOCS:
+    for d in DOCS + QUIRK_DOCS:
         for m in MASKS:
             fast = parse_doc(d, m)
             if fast is None:
@@ -65,6 +78,9 @@ def test_pages_corpus_equivalence():
         html = build_page(i)[2]
         for m in (0x3FF, 0x141, 0x381):
             assert parse_doc(html, m) == fsm_rows(html, m), f"page {i} mask={m}"
+    html = build_large_xml()
+    for m in (0x3FF, 0x141, 0x381):
+        assert parse_doc(html, m) == fsm_rows(html, m), f"large xml mask={m}"
 
 
 def test_invalid_utf8_falls_back():

@@ -17,7 +17,8 @@ sys.path.insert(0, "/root/repo/tools")
 
 from sax_wasm_spark.kernel.fastsax import parse_doc
 from sax_wasm_spark.kernel.fastsax_np import parse_doc_flat_np, parse_doc_np
-from sax_wasm_spark.sources.pages import build_page
+from sax_wasm_spark.sources.pages import build_large_xml, build_page
+from test_fastsax import QUIRK_DOCS
 
 POS_SLOTS = range(10, 18)
 
@@ -42,7 +43,7 @@ def check(doc: bytes, m: int):
 def test_fixture_corpus_np_equivalence():
     from diff_ref import DOCS, MASKS  # noqa: PLC0415
 
-    for d in DOCS:
+    for d in DOCS + QUIRK_DOCS:
         for m in MASKS:
             check(d, m)
 
@@ -71,6 +72,9 @@ def test_pages_corpus_np_equivalence():
         html = build_page(i)[2]
         for m in (0x3FF, 0x141, 0x381):
             check(html, m)
+    html = build_large_xml()
+    for m in (0x3FF, 0x141, 0x381):
+        check(html, m)
 
 
 def test_reference_fixture_np_equivalence():

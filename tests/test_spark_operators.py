@@ -48,6 +48,21 @@ def test_tokenize_matches_kernel(spark, pages):
         assert actual == expect, f"url={r.url}"
 
 
+def test_tokenize_positions_off_zeroes_fallback_rows(spark):
+    """positions=False gives 0 in every line/char column, also on a
+    non-UTF-8 page, whose rows come from the position-tracking FSM
+    fallback; open_end/close_start stay null on text rows."""
+    page = b"<div>\n<p class=x>caf\xe9</p></div>"  # Latin-1
+    df = spark.createDataFrame([("u", page)], "url string, html binary")
+    rows = tokenize_events(df, positions=False).collect()
+    assert {r.event for r in rows} >= {0, 6, 7, 8}
+    cols = ["line_start", "char_start", "line_end", "char_end",
+            "open_end_line", "open_end_char", "close_start_line", "close_start_char"]
+    for r in rows:
+        tail = [None] * 4 if r.event == 0 else [0] * 4
+        assert [r[c] for c in cols] == [0] * 4 + tail, r
+
+
 def test_tokenize_chunked_values_match(spark, pages):
     """64-byte chunked streaming mode produces identical event values.
 
