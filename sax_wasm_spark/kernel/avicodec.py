@@ -24,7 +24,7 @@ assignment's multimodal/training-data scope.
 Design constraints, same policy as the other codecs:
 
 - **Per-row CPU work, zero shuffle** — operators run it inside
-  mapInPandas/mapInArrow batches; nothing here touches Spark.
+  mapInArrow batches; nothing here touches Spark.
 - **Hostile-input budget**: claimed dimensions and frame counts are
   validated against ``max_pixels`` / ``max_frames`` and the actual
   payload size BEFORE any allocation; every malformed structure raises

@@ -18,7 +18,7 @@ to the assignment's multimodal/training-data scope.
 Design constraints, same policy as the PNG/JPEG codecs:
 
 - **Per-row CPU work, zero shuffle** — operators run it inside
-  mapInPandas/mapInArrow batches; nothing here touches Spark.
+  mapInArrow batches; nothing here touches Spark.
 - **Hostile-input budget**: claimed dimensions are validated against
   ``max_pixels`` AND the actual payload size BEFORE any allocation;
   every malformed structure raises a typed ``BmpError`` so poison

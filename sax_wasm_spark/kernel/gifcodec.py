@@ -16,7 +16,7 @@ belongs to the assignment's multimodal/training-data scope.
 Same policy as the sibling codecs:
 
 - **Per-row CPU work, zero shuffle** — operators run it inside
-  mapInPandas/mapInArrow batches.
+  mapInArrow batches.
 - **Hostile-input budget**: total decoded pixels across frames are
   capped (``max_pixels``) before allocation, LZW output is bounded by
   the frame's own pixel count (a looping code table cannot blow up

@@ -13,7 +13,7 @@ the assignment's multimodal/training-data scope).
 Design constraints, chosen for the 100-TB corpus shape:
 
 - **Decode is per-row CPU work with zero shuffle** — the operator layer
-  runs it inside mapInPandas/mapInArrow batches; nothing here touches
+  runs it inside mapInArrow batches; nothing here touches
   Spark.
 - **Hostile-input budget**: dimensions are capped (default 16 MPx, the
   ``max_pixels`` knob) and every malformed structure raises a typed

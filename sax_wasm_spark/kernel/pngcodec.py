@@ -16,7 +16,7 @@ assignment's multimodal/training-data scope.
 Design constraints, same policy as the JPEG codec:
 
 - **Per-row CPU work, zero shuffle** — operators run it inside
-  mapInPandas/mapInArrow batches; nothing here touches Spark.
+  mapInArrow batches; nothing here touches Spark.
 - **Hostile-input budget**: dimensions are capped BEFORE the inflate
   (``max_pixels``, default 4 MPx — the Average/Paeth unfilters walk
   bytes in Python, so the cap is the straggler bound), the inflate

@@ -11,7 +11,7 @@ assignment's multimodal/training-data scope.
 Same policy as the JPEG/PNG codecs (kernel/jpegcodec.py, pngcodec.py):
 
 - **Per-row CPU work, zero shuffle** — operators run it inside
-  mapInPandas/mapInArrow batches.
+  mapInArrow batches.
 - **Hostile-input budget**: frame counts are capped before any
   allocation (``max_frames``), chunk walks are bounds-checked, and
   every malformed structure raises a typed ``WavError`` so poison

@@ -313,8 +313,7 @@ def extract_main_content(
             arrays = [
                 span_arr if f.name == "spans" else pa.array(out[f.name], type=f.type)
                 for f in arrow_fields[:n_extract_fields]
-            ] + [arr.combine_chunks() if hasattr(arr, "combine_chunks") else arr
-                 for arr in pass_arrays]
+            ] + pass_arrays
             yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     return src.mapInArrow(run, schema=out_struct)

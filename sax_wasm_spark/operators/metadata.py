@@ -29,7 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .rows import map_rows
 from .tokenize import tokenize_events
+
+
+def _ddl(df: DataFrame, cols: list[str]) -> str:
+    """``cols`` of ``df`` as a DDL field list (the id prefix of a schema)."""
+    return ", ".join(f"{c} {df.schema[c].dataType.simpleString()}" for c in cols)
+
 
 _EV_TEXT = 0
 _EV_ATTRIBUTE = 6
@@ -466,36 +473,20 @@ def extract_docx_paragraphs(
     fail) are dropped by the unzip stage with the typed reason in
     executor logs — per-package status belongs to an upstream
     inventory pass, not the per-paragraph table."""
+    from ..kernel.zipread import ZipError, zip_find  # noqa: PLC0415
+
     ids = list(id_cols)
 
-    def unzip(batches):
-        import pandas as pd  # noqa: PLC0415
+    def unzip(*vals):
+        *id_vals, data = vals
+        try:
+            xml = zip_find(data or b"", "word/document.xml")
+        except ZipError:
+            return []
+        return [(*id_vals, xml)]
 
-        from ..kernel.zipread import ZipError, zip_find  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {c: [] for c in (*ids, "xml")}
-            id_lists = [(c, pdf[c].tolist()) for c in ids]  # r8: no per-row iloc
-            data_list = pdf[docx_col].tolist()
-            for row in range(len(data_list)):
-                data = data_list[row]
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    xml = zip_find(data or b"", "word/document.xml")
-                except ZipError:
-                    continue
-                for c, _vals in id_lists:
-                    out[c].append(_vals[row])
-                out["xml"].append(xml)
-            yield pd.DataFrame(out)
-
-    id_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in [packages.schema[c] for c in ids]
-    )
-    xml_df = packages.select(*ids, docx_col).mapInPandas(
-        unzip, schema=f"{id_schema}, xml binary"
+    xml_df = map_rows(
+        packages.select(*ids, docx_col), unzip, f"{_ddl(packages, ids)}, xml binary"
     )
     ev = tokenize_events(
         xml_df,
@@ -642,46 +633,27 @@ def extract_epub_chapters(
     are dropped by the resolve stage (typed reasons in executor
     logs). Scale shape: two row-local stages + the extractor's
     mapInArrow — zero shuffles in this operator itself."""
+    from ..kernel.zipread import ZipError  # noqa: PLC0415
     from .extract import extract_main_content  # noqa: PLC0415
 
     ids = list(id_cols)
 
-    def resolve(batches):
-        import pandas as pd  # noqa: PLC0415
+    def resolve(*vals):
+        *id_vals, data = vals
+        try:
+            chapters = epub_spine(data or b"")
+        except (ZipError, ValueError):
+            return []
+        return [(*id_vals, s, path, xhtml) for s, path, xhtml in chapters]
 
-        from ..kernel.zipread import ZipError  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {c: [] for c in (*ids, "spine_idx", "path", "url", "html")}
-            id_lists = [(c, pdf[c].tolist()) for c in ids]  # r8: no per-row iloc
-            data_list = pdf[epub_col].tolist()
-            for row in range(len(data_list)):
-                data = data_list[row]
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    chapters = epub_spine(data or b"")
-                except (ZipError, ValueError):
-                    continue
-                for s, path, xhtml in chapters:
-                    for c, _vals in id_lists:
-                        out[c].append(_vals[row])
-                    out["spine_idx"].append(s)
-                    out["path"].append(path)
-                    out["url"].append(f"epub:{row}:{s}")
-                    out["html"].append(xhtml)
-            yield pd.DataFrame(out)
-
-    id_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in [packages.schema[c] for c in ids]
-    )
-    pages = packages.select(*ids, epub_col).mapInPandas(
+    pages = map_rows(
+        packages.select(*ids, epub_col),
         resolve,
-        schema=f"{id_schema}, spine_idx int, path string, url string, html binary",
+        f"{_ddl(packages, ids)}, spine_idx int, path string, html binary",
     )
+    # the chapter path doubles as the extractor's url (dropped below)
     ex = extract_main_content(
-        pages, html_col="html", url_col="url",
+        pages, html_col="html", url_col="path",
         passthrough=(*ids, "spine_idx", "path"),
     )
     return ex.select(*ids, "spine_idx", "path", "title", "text")
@@ -889,55 +861,28 @@ def extract_xlsx_cells(
     shape: one windowed exchange per part plus ONE co-partitioned
     join keyed (id…, sst index) — shared strings are per-document, so
     the join never crosses documents."""
+    from ..kernel.zipread import ZipError, zip_entries, zip_read  # noqa: PLC0415
+
     ids = list(id_cols)
 
-    def unzip(batches):
-        import pandas as pd  # noqa: PLC0415
+    def unzip(*vals):
+        *id_vals, data = vals
+        try:  # ONE central-directory pass serves both members
+            by_name = {e.name: e for e in zip_entries(data or b"")}
+            sheet_e = by_name.get("xl/worksheets/sheet1.xml")
+            if sheet_e is None:
+                raise ZipError("no xl/worksheets/sheet1.xml")
+            sheet = zip_read(data, sheet_e)
+            sst_e = by_name.get("xl/sharedStrings.xml")
+            sst = zip_read(data, sst_e) if sst_e else b"<sst/>"
+        except ZipError as e:
+            # the key must not vanish: an error part-row flows
+            # through to one kind='error:*' output row
+            return [(*id_vals, "error", str(e).encode("utf-8", "replace"))]
+        return [(*id_vals, "sheet", sheet), (*id_vals, "sst", sst)]
 
-        from ..kernel.zipread import (  # noqa: PLC0415
-            ZipError,
-            zip_entries,
-            zip_read,
-        )
-
-        for pdf in batches:
-            out = {c: [] for c in (*ids, "part", "xml")}
-            id_lists = [(c, pdf[c].tolist()) for c in ids]  # r8: no per-row iloc
-            data_list = pdf[xlsx_col].tolist()
-            for row in range(len(data_list)):
-                data = data_list[row]
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-
-                def emit(part, xml, _row=row):
-                    for c, _vals in id_lists:
-                        out[c].append(_vals[_row])
-                    out["part"].append(part)
-                    out["xml"].append(xml)
-
-                try:  # ONE central-directory pass serves both members
-                    by_name = {e.name: e for e in zip_entries(data or b"")}
-                    sheet_e = by_name.get("xl/worksheets/sheet1.xml")
-                    if sheet_e is None:
-                        raise ZipError("no xl/worksheets/sheet1.xml")
-                    sheet = zip_read(data, sheet_e)
-                    sst_e = by_name.get("xl/sharedStrings.xml")
-                    sst = zip_read(data, sst_e) if sst_e else b"<sst/>"
-                except ZipError as e:
-                    # the key must not vanish: an error part-row flows
-                    # through to one kind='error:*' output row
-                    emit("error", str(e).encode("utf-8", "replace"))
-                    continue
-                emit("sheet", sheet)
-                emit("sst", sst)
-            yield pd.DataFrame(out)
-
-    id_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in [packages.schema[c] for c in ids]
-    )
-    parts = packages.select(*ids, xlsx_col).mapInPandas(
-        unzip, schema=f"{id_schema}, part string, xml binary"
+    parts = map_rows(
+        packages.select(*ids, xlsx_col), unzip, f"{_ddl(packages, ids)}, part string, xml binary"
     )
     err_rows = parts.where(F.col("part") == "error").select(
         *ids,
@@ -1135,56 +1080,28 @@ def extract_tar_members(
         ]
     )
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..kernel.tarread import TarError, tar_members  # noqa: PLC0415
 
-        from ..kernel.tarread import TarError, tar_members  # noqa: PLC0415
+    def row(*vals):
+        *id_vals, data = vals
+        try:
+            members = tar_members(data or b"")
+        except TarError as e:
+            yield (*id_vals, None, None, f"error:{e}", None, None)
+            return
+        if not members:  # valid but empty: the key survives
+            yield (*id_vals, None, None, "empty", None, None)
+            return
+        for idx, m in enumerate(members):
+            text = (
+                m.data.decode("utf-8", "replace")
+                if m.typeflag == "0" and m.name.rsplit(".", 1)[-1] in ("txt", "md")
+                else None
+            )
+            kind = "dir" if m.typeflag == "5" else "file"
+            yield (*id_vals, idx, m.name, kind, m.size, text)
 
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            id_lists = [pdf[c].tolist() for c in ids]  # r8: no per-row iloc
-            data_list = pdf[tar_col].tolist()
-            for row in range(len(data_list)):
-                vals = [v[row] for v in id_lists]
-                data = data_list[row]
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    members = tar_members(data or b"")
-                except TarError as e:
-                    for c, v in zip(ids, vals):
-                        out[c].append(v)
-                    out["member_idx"].append(None)
-                    out["name"].append(None)
-                    out["kind"].append(f"error:{e}")
-                    out["size"].append(None)
-                    out["text"].append(None)
-                    continue
-                if not members:  # valid but empty: the key survives
-                    for c, v in zip(ids, vals):
-                        out[c].append(v)
-                    out["member_idx"].append(None)
-                    out["name"].append(None)
-                    out["kind"].append("empty")
-                    out["size"].append(None)
-                    out["text"].append(None)
-                    continue
-                for idx, m in enumerate(members):
-                    for c, v in zip(ids, vals):
-                        out[c].append(v)
-                    out["member_idx"].append(idx)
-                    out["name"].append(m.name)
-                    out["kind"].append("dir" if m.typeflag == "5" else "file")
-                    out["size"].append(m.size)
-                    out["text"].append(
-                        m.data.decode("utf-8", "replace")
-                        if m.typeflag == "0"
-                        and m.name.rsplit(".", 1)[-1] in ("txt", "md")
-                        else None
-                    )
-            yield pd.DataFrame(out)
-
-    return packages.select(*ids, tar_col).mapInPandas(run, schema=out_schema)
+    return map_rows(packages.select(*ids, tar_col), row, out_schema)
 
 
 _FEED_MIME = {

@@ -1,6 +1,7 @@
 """Multimodal columns: images/audio/video as opaque binary + typed
 metadata, with the Spark-side plumbing (schemas, Arrow batching,
-mapInPandas decode stage) fully real and tested.
+the per-row decode stages over ``operators/rows.map_rows``) fully real
+and tested.
 
 External codecs (Pillow/ffmpeg/torchaudio) are NOT in this container,
 but JPEG and PNG images and PCM WAV audio decode for REAL via the
@@ -32,6 +33,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .rows import map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -221,29 +224,15 @@ def extract_media_features(
     else:
         raise ValueError(f"decoder must be 'fake', 'real', or a callable, got {decoder!r}")
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    def row(mid, kind, data):
+        data = data or b""
+        width, height, duration, feature = decode(str(kind), data)
+        yield (
+            mid, str(kind), len(data), hashlib.sha256(data).hexdigest(),
+            width, height, duration, feature, "ok",
+        )
 
-        for pdf in batches:
-            out = {k.name: [] for k in FEATURE_SCHEMA.fields}
-            for mid, kind, data in zip(pdf[id_col], pdf[kind_col], pdf[media_col]):
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                width, height, duration, feature = decode(str(kind), data)
-                out["media_id"].append(int(mid))
-                out["kind"].append(str(kind))
-                out["n_bytes"].append(len(data))
-                out["content_hash"].append(hashlib.sha256(data).hexdigest())
-                out["width"].append(width)
-                out["height"].append(height)
-                out["duration_ms"].append(duration)
-                out["feature"].append(feature)
-                out["status"].append("ok")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_rows(df.select(id_col, kind_col, media_col), row, FEATURE_SCHEMA)
 
 
 def resize_images(
@@ -285,23 +274,10 @@ def resize_images(
                 counter += 1
             return bytes(out[: w * h])
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    def row(mid, data):
+        yield mid, target_w, target_h, resizer(data or b"", target_w, target_h)
 
-        for pdf in batches:
-            out = {id_col: [], "width": [], "height": [], "resized": []}
-            for mid, data in zip(pdf[id_col], pdf[media_col]):
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                out[id_col].append(int(mid))
-                out["width"].append(target_w)
-                out["height"].append(target_h)
-                out["resized"].append(resizer(data, target_w, target_h))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, media_col).mapInPandas(run, schema=out_schema)
+    return map_rows(df.select(id_col, media_col), row, out_schema)
 
 
 def sample_frames(
@@ -341,92 +317,71 @@ def sample_frames(
                 for i in range(n)
             ]
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    def row(mid, data):
+        for i, (ts, frame) in enumerate(sampler(data or b"", n_frames)):
+            yield mid, i, int(ts), frame
 
-        for pdf in batches:
-            out = {id_col: [], "frame_idx": [], "ts_ms": [], "frame": []}
-            for mid, data in zip(pdf[id_col], pdf[media_col]):
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                for i, (ts, frame) in enumerate(sampler(data, n_frames)):
-                    out[id_col].append(int(mid))
-                    out["frame_idx"].append(i)
-                    out["ts_ms"].append(int(ts))
-                    out["frame"].append(frame)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, media_col).mapInPandas(run, schema=out_schema)
+    return map_rows(df.select(id_col, media_col), row, out_schema)
 
 
-def _render_media_column(
-    df: DataFrame, id_col: str, n_col: str, media_name: str, builder: str
-) -> DataFrame:
-    """(id, n) → one row per clip: (id, img_idx, <media_name>:binary).
-    The deterministic writer-twin fan-out for the decode oracles
-    (sources/imagegen / audiogen closed forms; ``builder`` is
-    "<module>:<fn>" resolved on the executor so only names ship) —
-    identical regardless of partitioning, a 1→n fan-out inside the
-    executor batch (no shuffle, bytes never visit the driver)."""
-    from pyspark.sql.types import BinaryType  # noqa: PLC0415
-
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField("img_idx", IntegerType(), False),
-            StructField(media_name, BinaryType(), False),
-        ]
-    )
-
-    def run(batches):
-        import importlib  # noqa: PLC0415
-
-        import pandas as pd  # noqa: PLC0415
-
-        mod_name, fn_name = builder.split(":")
-        build = getattr(
-            importlib.import_module(f"sax_wasm_spark.sources.{mod_name}"), fn_name
-        )
-        for pdf in batches:
-            out = {id_col: [], "img_idx": [], media_name: []}
-            for did, n in zip(pdf[id_col], pdf[n_col]):
-                for k in range(int(n)):
-                    out[id_col].append(int(did))
-                    out["img_idx"].append(k)
-                    out[media_name].append(build(int(did), k))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, n_col).mapInPandas(run, schema=out_schema)
+def _render_schema(id_col: str, media_name: str) -> str:
+    return f"{id_col} long not null, img_idx int not null, {media_name} binary not null"
 
 
 def render_jpeg_column(
     df: DataFrame, id_col: str = "doc_id", n_col: str = "n_imgs"
 ) -> DataFrame:
-    """JPEG writer twin: (id, n) → (id, img_idx, jpeg:binary)."""
-    return _render_media_column(df, id_col, n_col, "jpeg", "imagegen:build_jpeg")
+    """JPEG writer twin: (id, n) → (id, img_idx, jpeg:binary). The
+    writer twins are the deterministic fan-out behind the decode oracles
+    (sources/imagegen / audiogen / videogen closed forms): identical
+    regardless of partitioning, 1→n inside the executor batch (no
+    shuffle, bytes never visit the driver)."""
+    from ..sources.imagegen import build_jpeg  # noqa: PLC0415
+
+    return map_rows(
+        df.select(id_col, n_col),
+        lambda did, n: ((did, k, build_jpeg(did, k)) for k in range(n)),
+        _render_schema(id_col, "jpeg"),
+    )
 
 
 def render_png_column(
     df: DataFrame, id_col: str = "doc_id", n_col: str = "n_imgs"
 ) -> DataFrame:
     """PNG writer twin: (id, n) → (id, img_idx, png:binary)."""
-    return _render_media_column(df, id_col, n_col, "png", "imagegen:build_png")
+    from ..sources.imagegen import build_png  # noqa: PLC0415
+
+    return map_rows(
+        df.select(id_col, n_col),
+        lambda did, n: ((did, k, build_png(did, k)) for k in range(n)),
+        _render_schema(id_col, "png"),
+    )
 
 
 def render_gif_column(
     df: DataFrame, id_col: str = "doc_id", n_col: str = "n_imgs"
 ) -> DataFrame:
     """GIF writer twin: (id, n) → (id, img_idx, gif:binary)."""
-    return _render_media_column(df, id_col, n_col, "gif", "imagegen:build_gif")
+    from ..sources.imagegen import build_gif  # noqa: PLC0415
+
+    return map_rows(
+        df.select(id_col, n_col),
+        lambda did, n: ((did, k, build_gif(did, k)) for k in range(n)),
+        _render_schema(id_col, "gif"),
+    )
 
 
 def render_wav_column(
     df: DataFrame, id_col: str = "doc_id", n_col: str = "n_clips"
 ) -> DataFrame:
     """WAV writer twin: (id, n) → (id, img_idx, wav:binary)."""
-    return _render_media_column(df, id_col, n_col, "wav", "audiogen:build_wav")
+    from ..sources.audiogen import build_wav  # noqa: PLC0415
+
+    return map_rows(
+        df.select(id_col, n_col),
+        lambda did, n: ((did, k, build_wav(did, k)) for k in range(n)),
+        _render_schema(id_col, "wav"),
+    )
 
 
 DECODE_STATS_SCHEMA_TAIL = [
@@ -461,42 +416,20 @@ def decode_jpeg_stats(
     id_fields = [df.schema[c] for c in id_cols]
     out_schema = StructType(list(id_fields) + DECODE_STATS_SCHEMA_TAIL)
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    def row(*vals):
+        *ids, data = vals
+        try:
+            img = decode_jpeg(data or b"", max_pixels=max_pixels)
+        except JpegError as e:
+            yield (*ids, *[None] * 6, f"error:{e}")
+            return
+        px = img.planes  # r8: sum(dtype=int64) exact, no copy
+        yield (
+            *ids, img.width, img.height, img.n_components,
+            int(px.sum(dtype=np.int64)), int(px.min()), int(px.max()), "ok",
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            id_lists = [(c, pdf[c].tolist()) for c in id_cols]  # r8: no per-row iloc
-            media_list = pdf[media_col].tolist()
-            for row in range(len(media_list)):
-                for c, _vals in id_lists:
-                    out[c].append(_vals[row])
-                data = media_list[row]
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    img = decode_jpeg(data, max_pixels=max_pixels)
-                    px = img.planes  # r8: sum(dtype=int64) exact, no copy
-                    out["width"].append(img.width)
-                    out["height"].append(img.height)
-                    out["n_channels"].append(img.n_components)
-                    out["pixel_sum"].append(int(px.sum(dtype=np.int64)))
-                    out["pixel_min"].append(int(px.min()))
-                    out["pixel_max"].append(int(px.max()))
-                    out["status"].append("ok")
-                except JpegError as e:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["n_channels"].append(None)
-                    out["pixel_sum"].append(None)
-                    out["pixel_min"].append(None)
-                    out["pixel_max"].append(None)
-                    out["status"].append(f"error:{e}")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df.select(*id_cols, media_col), row, out_schema)
 
 
 def decode_image_stats(
@@ -661,50 +594,33 @@ def decode_audio_stats(
     id_fields = [df.schema[c] for c in id_cols]
     out_schema = StructType(list(id_fields) + AUDIO_STATS_SCHEMA_TAIL)
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    def row(*vals):
+        *ids, data = vals
+        try:
+            clip = decode_wav(data or b"", max_frames=max_frames)
+        except WavError as e:
+            yield (*ids, *[None] * 8, f"error:{e}")
+            return
+        s = clip.samples  # r8: sum(dtype=int64) exact, no copy
+        yield (
+            *ids, clip.n_channels, clip.sample_rate, clip.bits, clip.n_frames,
+            clip.duration_ms, int(s.sum(dtype=np.int64)), int(s.min()), int(s.max()), "ok",
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            id_lists = [(c, pdf[c].tolist()) for c in id_cols]  # r8: no per-row iloc
-            media_list = pdf[media_col].tolist()
-            for row in range(len(media_list)):
-                for c, _vals in id_lists:
-                    out[c].append(_vals[row])
-                data = media_list[row]
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    clip = decode_wav(data, max_frames=max_frames)
-                    s = clip.samples  # r8: sum(dtype=int64) exact, no copy
-                    out["n_channels"].append(clip.n_channels)
-                    out["sample_rate"].append(clip.sample_rate)
-                    out["bits"].append(clip.bits)
-                    out["n_frames"].append(clip.n_frames)
-                    out["duration_ms"].append(clip.duration_ms)
-                    out["sample_sum"].append(int(s.sum(dtype=np.int64)))
-                    out["sample_min"].append(int(s.min()))
-                    out["sample_max"].append(int(s.max()))
-                    out["status"].append("ok")
-                except WavError as e:
-                    for col in (
-                        "n_channels", "sample_rate", "bits", "n_frames",
-                        "duration_ms", "sample_sum", "sample_min", "sample_max",
-                    ):
-                        out[col].append(None)
-                    out["status"].append(f"error:{e}")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df.select(*id_cols, media_col), row, out_schema)
 
 
 def render_avi_column(
     df: DataFrame, id_col: str = "doc_id", n_col: str = "n_clips"
 ) -> DataFrame:
     """AVI writer twin: (id, n) → (id, img_idx, avi:binary)."""
-    return _render_media_column(df, id_col, n_col, "avi", "videogen:build_avi")
+    from ..sources.videogen import build_avi  # noqa: PLC0415
+
+    return map_rows(
+        df.select(id_col, n_col),
+        lambda did, n: ((did, k, build_avi(did, k)) for k in range(n)),
+        _render_schema(id_col, "avi"),
+    )
 
 
 VIDEO_STATS_SCHEMA_TAIL = [
@@ -717,6 +633,27 @@ VIDEO_STATS_SCHEMA_TAIL = [
     StructField("pixel_max", IntegerType(), True),
     StructField("status", StringType(), False),
 ]
+
+
+def _avi_stats(data: bytes, max_pixels: int, max_frames: int) -> tuple:
+    """One clip's ``VIDEO_STATS_SCHEMA_TAIL`` values: pixel statistics
+    span EVERY frame; an ``AviError`` becomes NULL stats and an
+    ``error:…`` status."""
+    import numpy as np  # noqa: PLC0415
+
+    from ..kernel.avicodec import AviError, decode_avi  # noqa: PLC0415
+
+    try:
+        clip = decode_avi(data, max_pixels=max_pixels, max_frames=max_frames)
+    except AviError as e:
+        return (*[None] * 7, f"error:{e}")
+    s = mn = mx = None
+    for px in clip.frames:  # r8: exact without the int64 copy
+        s = (s or 0) + int(px.sum(dtype=np.int64))
+        fmn, fmx = int(px.min()), int(px.max())
+        mn = fmn if mn is None else min(mn, fmn)
+        mx = fmx if mx is None else max(mx, fmx)
+    return clip.n_frames, clip.width, clip.height, clip.duration_ms, s, mn, mx, "ok"
 
 
 def decode_video_stats(
@@ -735,57 +672,13 @@ def decode_video_stats(
     budget, same policy as the image tier. Per-row CPU inside Arrow
     batches, zero shuffle; ``max_pixels``/``max_frames`` bound hostile
     claims before allocation."""
-    import numpy as np  # noqa: PLC0415
-
-    from ..kernel.avicodec import AviError, decode_avi  # noqa: PLC0415
-
     id_fields = [df.schema[c] for c in id_cols]
     out_schema = StructType(list(id_fields) + VIDEO_STATS_SCHEMA_TAIL)
-
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            id_lists = [(c, pdf[c].tolist()) for c in id_cols]  # r8: no per-row iloc
-            media_list = pdf[media_col].tolist()
-            for row in range(len(media_list)):
-                for c, _vals in id_lists:
-                    out[c].append(_vals[row])
-                data = media_list[row]
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    clip = decode_avi(
-                        data, max_pixels=max_pixels, max_frames=max_frames
-                    )
-                    s = mn = mx = None
-                    for fr in clip.frames:  # stats span ALL frames
-                        px = fr  # r8: exact without the int64 copy
-                        s = (s or 0) + int(px.sum(dtype=np.int64))
-                        fmn, fmx = int(px.min()), int(px.max())
-                        mn = fmn if mn is None else min(mn, fmn)
-                        mx = fmx if mx is None else max(mx, fmx)
-                    out["n_frames"].append(clip.n_frames)
-                    out["width"].append(clip.width)
-                    out["height"].append(clip.height)
-                    out["duration_ms"].append(clip.duration_ms)
-                    out["pixel_sum"].append(s)
-                    out["pixel_min"].append(mn)
-                    out["pixel_max"].append(mx)
-                    out["status"].append("ok")
-                except AviError as e:
-                    for col in (
-                        "n_frames", "width", "height", "duration_ms",
-                        "pixel_sum", "pixel_min", "pixel_max",
-                    ):
-                        out[col].append(None)
-                    out["status"].append(f"error:{e}")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(
+        df.select(*id_cols, media_col),
+        lambda *v: [(*v[:-1], *_avi_stats(v[-1] or b"", max_pixels, max_frames))],
+        out_schema,
+    )
 
 
 def render_decode_video_stats(
@@ -805,59 +698,21 @@ def render_decode_video_stats(
     out. The un-fused operators remain the production pipeline surface
     (real corpora arrive as stored bytes); this is the roundtrip-bench
     shape."""
-    import numpy as np  # noqa: PLC0415
-
-    from ..kernel.avicodec import AviError, decode_avi  # noqa: PLC0415
+    from ..sources.videogen import build_avi  # noqa: PLC0415
 
     id_field = df.schema[id_col]
     out_schema = StructType(
         [id_field, StructField("img_idx", IntegerType(), False)]
         + VIDEO_STATS_SCHEMA_TAIL
     )
-
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        from ..sources.videogen import build_avi  # noqa: PLC0415
-
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            for did, nclips in zip(pdf[id_col], pdf[n_col]):
-                did = int(did)
-                for k in range(int(nclips)):
-                    out[id_col].append(did)
-                    out["img_idx"].append(k)
-                    try:
-                        clip = decode_avi(
-                            build_avi(did, k),
-                            max_pixels=max_pixels,
-                            max_frames=max_frames,
-                        )
-                        s = mn = mx = None
-                        for fr in clip.frames:  # stats span ALL frames
-                            px = fr  # r8: exact without the int64 copy
-                            s = (s or 0) + int(px.sum(dtype=np.int64))
-                            fmn, fmx = int(px.min()), int(px.max())
-                            mn = fmn if mn is None else min(mn, fmn)
-                            mx = fmx if mx is None else max(mx, fmx)
-                        out["n_frames"].append(clip.n_frames)
-                        out["width"].append(clip.width)
-                        out["height"].append(clip.height)
-                        out["duration_ms"].append(clip.duration_ms)
-                        out["pixel_sum"].append(s)
-                        out["pixel_min"].append(mn)
-                        out["pixel_max"].append(mx)
-                        out["status"].append("ok")
-                    except AviError as e:
-                        for col in (
-                            "n_frames", "width", "height", "duration_ms",
-                            "pixel_sum", "pixel_min", "pixel_max",
-                        ):
-                            out[col].append(None)
-                        out["status"].append(f"error:{e}")
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, n_col).mapInPandas(run, schema=out_schema)
+    return map_rows(
+        df.select(id_col, n_col),
+        lambda did, n: [
+            (did, k, *_avi_stats(build_avi(did, k), max_pixels, max_frames))
+            for k in range(n)
+        ],
+        out_schema,
+    )
 
 
 def demux_audio_stats(
@@ -893,51 +748,27 @@ def demux_audio_stats(
             StructField("status", StringType(), False),
         ]
     )
-    stat_cols = (
-        "audio_rate", "n_channels", "n_samples",
-        "sample_sum", "sample_min", "sample_max",
-    )
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    def row(*vals):
+        *ids, data = vals
+        try:
+            clip = decode_avi(
+                data or b"", max_pixels=max_pixels, max_samples=max_samples,
+                skip_frames=True,
+            )
+        except AviError as e:
+            yield (*ids, *[None] * 6, f"error:{e}")
+            return
+        px = clip.audio_samples  # r8: sum(dtype=int64) exact
+        if px is None:
+            yield (*ids, *[None] * 6, "no_audio")
+            return
+        yield (
+            *ids, clip.audio_rate, clip.audio_channels, len(px),
+            int(px.sum(dtype=np.int64)), int(px.min()), int(px.max()), "ok",
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            id_lists = [(c, pdf[c].tolist()) for c in id_cols]  # r8: no per-row iloc
-            media_list = pdf[media_col].tolist()
-            for row in range(len(media_list)):
-                for c, _vals in id_lists:
-                    out[c].append(_vals[row])
-                data = media_list[row]
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    clip = decode_avi(
-                        data, max_pixels=max_pixels, max_samples=max_samples,
-                        skip_frames=True,
-                    )
-                    if clip.audio_samples is None:
-                        for col in stat_cols:
-                            out[col].append(None)
-                        out["status"].append("no_audio")
-                        continue
-                    px = clip.audio_samples  # r8: sum(dtype=int64) exact
-                    out["audio_rate"].append(clip.audio_rate)
-                    out["n_channels"].append(clip.audio_channels)
-                    out["n_samples"].append(len(clip.audio_samples))
-                    out["sample_sum"].append(int(px.sum(dtype=np.int64)))
-                    out["sample_min"].append(int(px.min()))
-                    out["sample_max"].append(int(px.max()))
-                    out["status"].append("ok")
-                except AviError as e:
-                    for col in stat_cols:
-                        out[col].append(None)
-                    out["status"].append(f"error:{e}")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df.select(*id_cols, media_col), row, out_schema)
 
 
 def perceptual_hash_videos(
@@ -969,39 +800,17 @@ def perceptual_hash_videos(
         ]
     )
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    def row(*vals):
+        *ids, data = vals
+        try:
+            clip = decode_avi(data or b"", max_pixels=max_pixels, max_frames=max_frames)
+        except AviError as e:
+            yield (*ids, *[None] * 3, f"error:{e}")
+            return
+        vhash = "".join(f"{dhash_planes(fr):016x}" for fr in clip.frames)
+        yield (*ids, clip.codec, clip.n_frames, vhash, "ok")
 
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            id_lists = [(c, pdf[c].tolist()) for c in id_cols]  # r8: no per-row iloc
-            media_list = pdf[media_col].tolist()
-            for row in range(len(media_list)):
-                for c, _vals in id_lists:
-                    out[c].append(_vals[row])
-                data = media_list[row]
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    clip = decode_avi(
-                        data, max_pixels=max_pixels, max_frames=max_frames
-                    )
-                    out["codec"].append(clip.codec)
-                    out["n_frames"].append(clip.n_frames)
-                    out["vhash"].append(
-                        "".join(f"{dhash_planes(fr):016x}" for fr in clip.frames)
-                    )
-                    out["status"].append("ok")
-                except AviError as e:
-                    out["codec"].append(None)
-                    out["n_frames"].append(None)
-                    out["vhash"].append(None)
-                    out["status"].append(f"error:{e}")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df.select(*id_cols, media_col), row, out_schema)
 
 
 def dhash_video_frames(
@@ -1029,39 +838,17 @@ def dhash_video_frames(
         ]
     )
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    def row(*vals):
+        *ids, data = vals
+        try:
+            clip = decode_avi(data or b"", max_pixels=max_pixels, max_frames=max_frames)
+        except AviError as e:
+            yield (*ids, None, None, f"error:{e}")
+            return
+        for f_idx, fr in enumerate(clip.frames):
+            yield (*ids, f_idx, f"{dhash_planes(fr):016x}", "ok")
 
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            id_lists = [pdf[c].tolist() for c in id_cols]  # r8: no per-row iloc
-            media_list = pdf[media_col].tolist()
-            for row in range(len(media_list)):
-                ids = [v[row] for v in id_lists]
-                data = media_list[row]
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    clip = decode_avi(
-                        data, max_pixels=max_pixels, max_frames=max_frames
-                    )
-                    for f_idx, fr in enumerate(clip.frames):
-                        for c, v in zip(id_cols, ids):
-                            out[c].append(v)
-                        out["frame_idx"].append(f_idx)
-                        out["fhash"].append(f"{dhash_planes(fr):016x}")
-                        out["status"].append("ok")
-                except AviError as e:
-                    for c, v in zip(id_cols, ids):
-                        out[c].append(v)
-                    out["frame_idx"].append(None)
-                    out["fhash"].append(None)
-                    out["status"].append(f"error:{e}")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df.select(*id_cols, media_col), row, out_schema)
 
 
 EXIF_SCHEMA_TAIL = [
@@ -1096,57 +883,29 @@ def extract_exif(
 
     id_fields = [df.schema[c] for c in id_cols]
     out_schema = StructType(list(id_fields) + EXIF_SCHEMA_TAIL)
-    field_cols = (
-        "make", "model", "orientation", "taken_at",
-        "exposure", "iso", "pixel_x", "pixel_y",
+    # exif key → the python type its column holds, in EXIF_SCHEMA_TAIL order
+    fields = (
+        ("make", str), ("model", str), ("orientation", int), ("datetime", str),
+        ("exposure", str), ("iso", int), ("pixel_x", int), ("pixel_y", int),
     )
-    key_of = {
-        "make": "make", "model": "model", "orientation": "orientation",
-        "taken_at": "datetime", "exposure": "exposure", "iso": "iso",
-        "pixel_x": "pixel_x", "pixel_y": "pixel_y",
-    }
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    def row(*vals):
+        *ids, data = vals
+        try:
+            exif = exif_from_jpeg(data or b"")
+        except TiffError as e:
+            yield (*ids, *[None] * 8, f"error:{e}")
+            return
+        if exif is None:
+            yield (*ids, *[None] * 8, "no_exif")
+            return
+        # hostile wire TYPES (a RATIONAL orientation, a SHORT
+        # ExposureTime) must not poison the Arrow batch: enforce the
+        # schema per value
+        vs = [exif.get(k) for k, _ in fields]
+        yield (*ids, *[v if isinstance(v, t) else None for v, (_, t) in zip(vs, fields)], "ok")
 
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            id_lists = [(c, pdf[c].tolist()) for c in id_cols]  # r8: no per-row iloc
-            media_list = pdf[media_col].tolist()
-            for row in range(len(media_list)):
-                for c, _vals in id_lists:
-                    out[c].append(_vals[row])
-                data = media_list[row]
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    exif = exif_from_jpeg(data)
-                except TiffError as e:
-                    for col in field_cols:
-                        out[col].append(None)
-                    out["status"].append(f"error:{e}")
-                    continue
-                if exif is None:
-                    for col in field_cols:
-                        out[col].append(None)
-                    out["status"].append("no_exif")
-                    continue
-                for col in field_cols:
-                    v = exif.get(key_of[col])
-                    # hostile wire TYPES (a RATIONAL orientation, a
-                    # SHORT ExposureTime) must not poison the Arrow
-                    # batch: enforce the schema per value
-                    if col in ("orientation", "iso", "pixel_x", "pixel_y"):
-                        v = v if isinstance(v, int) else None
-                    else:
-                        v = v if isinstance(v, str) else None
-                    out[col].append(v)
-                out["status"].append("ok")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df.select(*id_cols, media_col), row, out_schema)
 
 
 def parse_caption_cues(
@@ -1187,53 +946,25 @@ def parse_caption_cues(
         ]
     )
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    def row(*vals):
+        *ids, data = vals
+        data = data or b""
+        fmt = sniff_captions(data)
+        try:
+            cues = (parse_srt if fmt == "srt" else parse_vtt)(data)
+        except VttError as e:
+            yield (*ids, *[None] * 7, f"error:{e}")
+            return
+        if not cues:  # valid but cue-less: ONE row so the (id…) key never vanishes
+            yield (*ids, fmt, *[None] * 6, "empty")
+            return
+        for idx, cue in enumerate(cues):
+            yield (
+                *ids, fmt, idx, cue.cue_id, cue.start_ms, cue.end_ms,
+                cue.settings, cue.text, "ok",
+            )
 
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            id_lists = [pdf[c].tolist() for c in id_cols]  # r8: no per-row iloc
-            media_list = pdf[media_col].tolist()
-            for row in range(len(media_list)):
-                ids = [v[row] for v in id_lists]
-                data = media_list[row]
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                err = None
-                fmt = sniff_captions(data)
-                try:
-                    cues = (parse_srt if fmt == "srt" else parse_vtt)(data)
-                except VttError as e:
-                    cues, err = None, f"error:{e}"
-                if not cues:  # wrong format, or valid but cue-less:
-                    # emit ONE row either way so the (id…) key never
-                    # silently vanishes from the output
-                    for c, v in zip(id_cols, ids):
-                        out[c].append(v)
-                    out["format"].append(None if err else fmt)
-                    for col in (
-                        "cue_idx", "cue_id", "start_ms",
-                        "end_ms", "settings", "text",
-                    ):
-                        out[col].append(None)
-                    out["status"].append(err or "empty")
-                    continue
-                for idx, cue in enumerate(cues):
-                    for c, v in zip(id_cols, ids):
-                        out[c].append(v)
-                    out["format"].append(fmt)
-                    out["cue_idx"].append(idx)
-                    out["cue_id"].append(cue.cue_id)
-                    out["start_ms"].append(cue.start_ms)
-                    out["end_ms"].append(cue.end_ms)
-                    out["settings"].append(cue.settings)
-                    out["text"].append(cue.text)
-                    out["status"].append("ok")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df.select(*id_cols, media_col), row, out_schema)
 
 
 def avi_frame_sampler(data: bytes, n: int):
@@ -1323,50 +1054,32 @@ def perceptual_hash_images(
         ]
     )
 
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
+    def row(*vals):
+        *ids, data = vals
+        data = data or b""
+        fmt = None
+        try:
+            if data.startswith(PNG_SIGNATURE):
+                fmt = "png"
+                planes = decode_png(data, max_pixels=max_pixels).planes
+            elif data[:2] == b"\xff\xd8":
+                fmt = "jpeg"
+                planes = decode_jpeg(data, max_pixels=max_pixels).planes
+            elif data[:6] in GIF_MAGICS:
+                fmt = "gif"
+                planes = decode_gif(data, max_pixels=max_pixels).frames[0].planes
+            elif data[:2] == BMP_MAGIC:
+                fmt = "bmp"
+                planes = decode_bmp(data, max_pixels=max_pixels).planes
+            else:
+                raise ValueError("unknown image format")
+            phash = f"{dhash_planes(planes):016x}"
+        except ValueError as e:  # all codec errors subclass it
+            yield (*ids, fmt, None, f"error:{e}")
+            return
+        yield (*ids, fmt, phash, "ok")
 
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            # r8: batch columns convert to lists ONCE — per-row
-            # Series.iloc access costs microseconds each and dominated
-            # small-image batches
-            id_lists = [(c, pdf[c].tolist()) for c in id_cols]
-            media_list = pdf[media_col].tolist()
-            for row in range(len(media_list)):
-                for c, vals in id_lists:
-                    out[c].append(vals[row])
-                data = media_list[row]
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                fmt = None
-                try:
-                    if data.startswith(PNG_SIGNATURE):
-                        fmt = "png"
-                        planes = decode_png(data, max_pixels=max_pixels).planes
-                    elif data[:2] == b"\xff\xd8":
-                        fmt = "jpeg"
-                        planes = decode_jpeg(data, max_pixels=max_pixels).planes
-                    elif data[:6] in GIF_MAGICS:
-                        fmt = "gif"
-                        planes = decode_gif(data, max_pixels=max_pixels).frames[0].planes
-                    elif data[:2] == BMP_MAGIC:
-                        fmt = "bmp"
-                        planes = decode_bmp(data, max_pixels=max_pixels).planes
-                    else:
-                        raise ValueError("unknown image format")
-                    out["format"].append(fmt)
-                    out["phash"].append(f"{dhash_planes(planes):016x}")
-                    out["status"].append("ok")
-                except ValueError as e:  # all codec errors subclass it
-                    out["format"].append(fmt)
-                    out["phash"].append(None)
-                    out["status"].append(f"error:{e}")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df.select(*id_cols, media_col), row, out_schema)
 
 
 def media_dedup_exact(features: DataFrame) -> DataFrame:

@@ -3,7 +3,7 @@
 Schema (authoritative, BASELINE.json input_hint):
     url:string, warc_ts:timestamp, html:binary, text:string, lang:string
 
-Rows are generated *distributively* (``spark.range`` → ``mapInPandas``)
+Rows are generated *distributively* (``spark.range`` → ``map_rows``)
 and *deterministically*: every column is a pure function of the row id,
 so the corpus is identical regardless of partitioning, parallelism, or
 run — the property the N-vs-4N scaling benchmark and the resume tests
@@ -21,15 +21,15 @@ import hashlib
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
+
+from ..operators.rows import map_rows
 
 PAGES_SCHEMA = StructType(
     [
@@ -172,16 +172,10 @@ def synthesize_pages(
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 8)
 
-    def gen(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            rows = [build_page(int(i), scale) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    return (
-        spark.range(start_id, start_id + n_pages, numPartitions=partitions)
-        .mapInPandas(gen, schema=PAGES_SCHEMA)
+    return map_rows(
+        spark.range(start_id, start_id + n_pages, numPartitions=partitions),
+        lambda i: [build_page(i, scale)],
+        PAGES_SCHEMA,
     )
 
 
@@ -192,10 +186,3 @@ def write_pages(spark: SparkSession, n_pages: int, path: str, partitions: int | 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
-
-def with_url_shard(df: DataFrame, num_shards: int) -> DataFrame:
-    """Stable url-hash shard column — the partition/lineage key
-    (SURVEY.md §2.4: repartition by sha2(url))."""
-    return df.withColumn(
-        "shard", (F.abs(F.hash(F.sha2(F.col("url"), 256))) % F.lit(num_shards)).cast(LongType())
-    )

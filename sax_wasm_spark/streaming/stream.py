@@ -1,7 +1,7 @@
 """Structured Streaming ingestion for the extraction pipeline.
 
 The batch operators are stateless per document, so they lift directly
-into streaming (mapInPandas is a stateless streaming transform):
+into streaming (mapInArrow is a stateless streaming transform):
 
     pages stream → dedup latest-capture per url (watermark) → extract →
     sink (parquet + checkpoint)
